@@ -9,14 +9,17 @@ import json
 from ukis_kafka_spark import cli
 
 
-def _write_geojson(path, n=5, start=0):
+def _write_geojson(path, n=5, start=0, keyless=()):
+    """``n`` point features with fids ``start..start+n-1``; the features
+    at the positions in ``keyless`` carry no fid."""
     fc = {
         "type": "FeatureCollection",
         "features": [
             {
                 "type": "Feature",
                 "geometry": {"type": "Point", "coordinates": [10.0 + i, 50.0 + i]},
-                "properties": {"fid": start + i, "name": f"feat{start + i}"},
+                "properties": {"name": f"feat{start + i}"}
+                | ({} if i in keyless else {"fid": start + i}),
             }
             for i in range(n)
         ],
@@ -67,6 +70,95 @@ def test_cli_produce_consume_roundtrip(spark, tmp_path):
     assert len(fid4) == 1
     # batch 1 wrote fid 4 at (14, 54); batch 2 (start=4, i=0) at (10, 50)
     assert decode_wkb(bytes(fid4[0]["wkb"])) == ("POINT", (10.0, 50.0))
+
+
+def test_cli_consume_upsert_drops_keyless_features(spark, tmp_path, capsys):
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=12, keyless={0, 5, 11})
+    topic = str(tmp_path / "topic")
+    table = str(tmp_path / "table")
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+    capsys.readouterr()
+
+    assert cli.main(["consume-upsert", "--topic-dir", topic, "--table", table]) == 0
+    out = capsys.readouterr().out
+    assert "warning: dropping 3 features without a 'fid' property" in out
+    rows = spark.read.parquet(table).collect()
+    assert f"now {len(rows)} rows" in out
+    assert sorted(json.loads(r["props_json"])["fid"] for r in rows) == [
+        i for i in range(12) if i not in {0, 5, 11}
+    ]
+    assert all(r["fid"] is not None for r in rows)
+
+
+def test_cli_consumers_read_topic_mixing_pre_offset_files(spark, tmp_path):
+    """A topic written before offsets existed holds ``value``-only
+    files; appends add offset-bearing ones. The shared decode kernel
+    carries ``offset`` through, pre-offset rows read it as NULL, and the
+    offset-bearing copy of a shared fid wins the upsert."""
+    import pandas as pd
+
+    from ukis_kafka_spark.sources.envelope import make_envelope
+    from ukis_kafka_spark.spatial.wkb import decode_wkb, encode_wkb
+
+    topic = str(tmp_path / "topic")
+    old = [
+        make_envelope(encode_wkb(("POINT", (-1.0, -1.0))), {"fid": fid}, layer="pts")
+        for fid in (1, 100)
+    ]
+    spark.createDataFrame(
+        pd.DataFrame({"value": pd.Series(old, dtype=object)}), schema="value binary"
+    ).write.parquet(topic)
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=3)  # fids 0..2, fid 1 at (11, 51)
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic, "--layer", "pts"]) == 0
+
+    table = str(tmp_path / "table")
+    assert cli.main(["consume-upsert", "--topic-dir", topic, "--table", table]) == 0
+    by_fid = {r["fid"]: r for r in spark.read.parquet(table).collect()}
+    assert sorted(by_fid) == ["0", "1", "100", "2"]
+    assert decode_wkb(bytes(by_fid["1"]["wkb"])) == ("POINT", (11.0, 51.0))
+    assert decode_wkb(bytes(by_fid["100"]["wkb"])) == ("POINT", (-1.0, -1.0))
+
+    out = str(tmp_path / "sink")
+    assert cli.main(["consume-files", "--topic-dir", topic, "--out", out]) == 0
+    files = spark.read.parquet(out)
+    assert "offset" in files.columns
+    offsets = {(json.loads(r["props_json"])["fid"], r["offset"]) for r in files.collect()}
+    assert offsets == {(0, 2), (1, None), (1, 3), (2, 4), (100, None)}
+
+
+def test_cli_consumers_spark_job_budget(spark, tmp_path):
+    """Each consumer decodes the topic once and counts with
+    Observations: a second decode pass or a re-read of the output for a
+    log line would push a command over its job budget (the counts
+    measured when the budget was set: 4 / 5 / 2)."""
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=40, keyless={3, 17})
+    topic = str(tmp_path / "topic")
+    table = str(tmp_path / "table")
+    out = str(tmp_path / "sink")
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name, argv in [
+            ("upsert_new_table", ["consume-upsert", "--topic-dir", topic, "--table", table]),
+            ("upsert_existing_table", ["consume-upsert", "--topic-dir", topic, "--table", table]),
+            ("files", ["consume-files", "--topic-dir", topic, "--out", out]),
+        ]:
+            group = f"job-budget-{name}-{tmp_path.name}"
+            sc.setJobGroup(group, name)
+            assert cli.main(argv) == 0
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs["upsert_new_table"] <= 4, jobs
+    assert jobs["upsert_existing_table"] <= 5, jobs
+    assert jobs["files"] <= 2, jobs
+    assert spark.read.parquet(table).count() == 38
 
 
 def test_pipeline_demo_runs(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -109,6 +110,78 @@ def test_envelope_roundtrip():
     assert env["props"]["name"] == "berlin"
     assert env["meta"]["layer"] == "cities"
     assert decode_wkb(env["geom"]) == ("POINT", (13.405, 52.52))
+
+
+# --- malformed input: the decoders raise ValueError and nothing else ---
+
+_GOOD_WKB = [
+    encode_wkb(("POINT", (13.405, 52.52))),
+    encode_wkb(("MULTIPOLYGON", ((((0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 0.0)),),))),
+    encode_wkb(("MULTILINESTRING", (((0.0, 0.0), (1.0, 1.0)), ((2.0, 2.0), (3.0, 3.0))))),
+]
+_GOOD_ENVELOPES = [
+    make_envelope(w, {"fid": i, "name": "x" * 40, "h": 1.5, "ok": True}, layer="l")
+    for i, w in enumerate(_GOOD_WKB)
+]
+
+
+@st.composite
+def _mangled(draw, valid):
+    """A valid encoding with a few bytes overwritten, then cut short."""
+    buf = bytearray(draw(st.sampled_from(valid)))
+    for _ in range(draw(st.integers(0, 3))):
+        buf[draw(st.integers(0, len(buf) - 1))] = draw(st.integers(0, 255))
+    return bytes(buf[: draw(st.integers(0, len(buf)))])
+
+
+def _value_or_valueerror(decode, buf):
+    try:
+        decode(buf)
+    except ValueError:
+        pass
+
+
+@settings(max_examples=300)
+@given(st.one_of(st.binary(max_size=64), _mangled(_GOOD_ENVELOPES)))
+def test_read_envelope_fuzz_value_or_valueerror(buf):
+    _value_or_valueerror(read_envelope, buf)
+
+
+@settings(max_examples=300)
+@given(st.one_of(st.binary(max_size=64), _mangled(_GOOD_WKB)))
+def test_decode_wkb_fuzz_value_or_valueerror(buf):
+    _value_or_valueerror(decode_wkb, buf)
+
+
+@pytest.mark.parametrize(
+    "decode, buf",
+    [
+        pytest.param(unpackb, b"", id="empty-was-IndexError"),
+        pytest.param(read_envelope, _GOOD_ENVELOPES[0][:-1], id="cut-envelope-was-struct.error"),
+        pytest.param(decode_wkb, _GOOD_WKB[0][:-1], id="cut-wkb-was-struct.error"),
+        pytest.param(unpackb, b"\x81\x91\x01\x02", id="array-map-key-was-TypeError"),
+        pytest.param(read_envelope, packb({"geom": b"\x01"}), id="geom-only-was-accepted"),
+        pytest.param(unpackb, b"\xc4\x05ab", id="bin-length-past-buffer"),
+        pytest.param(unpackb, b"\x91" * 5000, id="nesting-deeper-than-stack"),
+        pytest.param(decode_wkb, b"\x02" + _GOOD_WKB[0][1:], id="wkb-byte-order-2"),
+        pytest.param(
+            decode_wkb,
+            bytes.fromhex("010400000001000000") + _GOOD_WKB[2],
+            id="multipoint-of-lines",
+        ),
+        pytest.param(
+            read_envelope, packb({"geom": b"", "props": {}, "meta": {"layer": 3}}), id="int-layer"
+        ),
+        pytest.param(
+            read_envelope,
+            packb({"geom": b"", "props": {}, "meta": {"layer": "l", "srid": "x"}}),
+            id="str-srid",
+        ),
+    ],
+)
+def test_decoders_reject_malformed_input_with_valueerror(decode, buf):
+    with pytest.raises(ValueError):
+        decode(buf)
 
 
 def test_point_in_polygon_goldens():

@@ -14,8 +14,8 @@ the directory for ``format("kafka")`` via sources.kafka.
 The producer reads GeoJSON with the stdlib (the reference uses OGR;
 GeoJSON is the library-free common denominator), converts geometries
 to WKB with the pure-Python codec, and wraps each feature in the
-msgpack envelope. Consumers decode with mapInPandas and run the R7/R8
-sinks.
+msgpack envelope. Consumers decode with the one envelope kernel,
+``sources.kafka.decode_feature_stream``, and run the R7/R8 sinks.
 """
 
 from __future__ import annotations
@@ -189,8 +189,7 @@ def cmd_produce_gpkg(args: argparse.Namespace) -> int:
 def _decoded_features(spark, topic_dir: str):
     from pyspark.sql import functions as F
 
-    from .sources.envelope import read_envelope
-    from .spatial.wkb import decode_wkb
+    from .sources.kafka import decode_feature_stream
 
     # mergeSchema: a topic dir may mix pre-offset files with
     # offset-bearing ones (appends to an old topic); without it Spark
@@ -201,69 +200,61 @@ def _decoded_features(spark, topic_dir: str):
     raw = spark.read.option("mergeSchema", "true").parquet(topic_dir)
     if "offset" not in raw.columns:  # all-pre-offset topic dirs remain readable
         raw = raw.withColumn("offset", F.lit(-1).cast("long"))
-
-    def decode(iter_pdf):
-        for pdf in iter_pdf:
-            out = {"layer": [], "srid": [], "geom_type": [], "wkb": [], "props_json": []}
-            for buf in pdf["value"]:
-                env = read_envelope(bytes(buf))
-                gtype, _ = decode_wkb(env["geom"])
-                out["layer"].append(env["meta"]["layer"])
-                out["srid"].append(env["meta"].get("srid", 4326))
-                out["geom_type"].append(gtype)
-                out["wkb"].append(env["geom"])
-                out["props_json"].append(json.dumps(env["props"], sort_keys=True))
-            out["offset"] = list(pdf["offset"])
-            yield pd.DataFrame(out)
-
-    return raw.mapInPandas(
-        decode,
-        "layer string, srid int, geom_type string, wkb binary, props_json string, offset long",
-    )
+    return decode_feature_stream(raw.select("value", "offset"))
 
 
 def cmd_consume_files(args: argparse.Namespace) -> int:
-    """R8: topic → partitioned filesystem sink."""
+    """R8: topic → partitioned filesystem sink, counted by an
+    Observation on the write (re-reading the output costs a scan)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from .plans import get_spark
 
     spark = get_spark("cli-consume-files")
-    feats = _decoded_features(spark, args.topic_dir)
+    obs = Observation()
+    feats = _decoded_features(spark, args.topic_dir).observe(obs, F.count(F.lit(1)).alias("n"))
     writer = feats.write.mode("overwrite")
     if args.partition_by:
         writer = writer.partitionBy(*args.partition_by.split(","))
     writer.parquet(args.out)
-    print(f"wrote {spark.read.parquet(args.out).count()} features to {args.out}")
+    print(f"wrote {obs.get['n']} features to {args.out}")
     return 0
 
 
 def cmd_consume_upsert(args: argparse.Namespace) -> int:
-    """R7+R9: topic → keyed upsert (idempotent re-delivery)."""
+    """R7+R9: topic → keyed upsert (idempotent re-delivery). One decode
+    pass: the keyless count is an Observation on the plan the merge runs,
+    and the row count is what the merge wrote."""
     import os
 
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .plans import get_spark
     from .sinks.files import upsert_parquet
 
     spark = get_spark("cli-consume-upsert")
-    feats = _decoded_features(spark, args.topic_dir).withColumn(
-        "fid", F.get_json_object("props_json", f"$.{args.key}")
+    keyless = Observation()
+    feats = (
+        _decoded_features(spark, args.topic_dir)
+        .withColumn("fid", F.get_json_object("props_json", f"$.{args.key}"))
+        .observe(keyless, F.count_if(F.col("fid").isNull()).alias("n"))
     )
     # keyless features cannot be upserted idempotently; dropping them is
     # explicit (a NULL key would otherwise collapse them into one row)
-    n_keyless = feats.where(F.col("fid").isNull()).count()
-    if n_keyless:
-        print(f"warning: dropping {n_keyless} features without a '{args.key}' property")
-        feats = feats.where(F.col("fid").isNotNull())
+    updates = feats.where(F.col("fid").isNotNull())
     if os.path.exists(args.table):
         base = spark.read.parquet(args.table)
     else:
-        feats.drop("offset").limit(0).write.parquet(args.table)
-        base = spark.read.parquet(args.table)
+        base = spark.createDataFrame([], feats.drop("offset").schema)
     # offset-order last-write-wins: re-delivered same-key messages in
     # one batch resolve to the latest produce, like the reference consumer
-    upsert_parquet(spark, base, feats, ["fid"], args.table, seq_col="offset")
-    print(f"upserted into {args.table}; now {spark.read.parquet(args.table).count()} rows")
+    n_rows = upsert_parquet(spark, base, updates, ["fid"], args.table, seq_col="offset")
+    n_keyless = keyless.get["n"]
+    if n_keyless:
+        print(f"warning: dropping {n_keyless} features without a '{args.key}' property")
+    print(f"upserted into {args.table}; now {n_rows} rows")
     return 0
 
 

@@ -15,7 +15,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -39,9 +39,11 @@ def upsert_parquet(
     keys: list[str],
     path: str,
     seq_col: str | None = None,
-) -> None:
+) -> int:
     """MERGE-by-key into a parquet target: rows from ``updates`` win
-    over ``base`` on key collision, new keys are inserted.
+    over ``base`` on key collision, new keys are inserted. Returns the
+    number of rows written (the new table size), counted by an
+    Observation on the write itself — no extra Spark job.
 
     Duplicate keys *within* ``updates``: pass ``seq_col`` naming a
     monotonic source-order column (the Kafka offset in the consumer
@@ -67,10 +69,12 @@ def upsert_parquet(
         updates.withColumn("_prio", F.lit(0))
     )
     w = Window.partitionBy(*keys).orderBy(F.col("_prio").asc())
+    written = Observation()
     merged = (
         tagged.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_prio", "_rn")
+        .observe(written, F.count(F.lit(1)).alias("n"))
     )
     tmp, old = path + "._new", path + "._old"
     merged.write.mode("overwrite").parquet(tmp)
@@ -80,6 +84,7 @@ def upsert_parquet(
         os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
+    return written.get["n"]
 
 
 @query(

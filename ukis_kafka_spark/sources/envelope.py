@@ -169,7 +169,10 @@ def _dec_map(buf: bytes, off: int, n: int) -> tuple[dict, int]:
     for _ in range(n):
         k, off = _decode(buf, off)
         v, off = _decode(buf, off)
-        d[k] = v
+        try:
+            d[k] = v
+        except TypeError:
+            raise ValueError("unhashable msgpack map key") from None
     return d, off
 
 
@@ -182,8 +185,18 @@ def _dec_arr(buf: bytes, off: int, n: int) -> tuple[list, int]:
 
 
 def unpackb(buf: bytes) -> Any:
-    """Decode msgpack bytes; raises on trailing garbage."""
-    obj, off = _decode(buf, 0)
+    """Decode msgpack bytes. Raises ``ValueError`` for any malformed
+    input: truncated or unsupported bytes, bad UTF-8, an unhashable map
+    key, nesting deeper than the interpreter stack, or trailing
+    garbage. A str/bin length that runs past the buffer is caught by
+    the final offset check: offsets only grow, so the short slice
+    leaves ``off`` beyond the end."""
+    try:
+        obj, off = _decode(buf, 0)
+    except (IndexError, struct.error, RecursionError) as exc:
+        raise ValueError(f"truncated envelope: {exc!r}") from None
+    if off > len(buf):
+        raise ValueError(f"truncated envelope: a length runs {off - len(buf)} bytes past the end")
     if off != len(buf):
         raise ValueError(f"trailing bytes after envelope: {len(buf) - off}")
     return obj
@@ -195,8 +208,21 @@ def make_envelope(wkb: bytes, properties: dict, layer: str, srid: int = 4326) ->
 
 
 def read_envelope(buf: bytes) -> dict:
-    """Wire bytes → feature dict (the reference's consumer-side R3)."""
+    """Wire bytes → feature dict (the reference's consumer-side R3).
+
+    Raises ``ValueError`` for any malformed input: undecodable msgpack
+    (see :func:`unpackb`), or a map without binary ``geom``, a ``props``
+    map, and a ``meta`` map with a string ``layer`` and an integer (or
+    absent/nil) ``srid``. The geometry bytes are not checked here;
+    ``spatial.wkb.decode_wkb`` does that."""
     env = unpackb(buf)
-    if not isinstance(env, dict) or "geom" not in env:
+    if not (
+        isinstance(env, dict)
+        and isinstance(env.get("geom"), bytes)
+        and isinstance(env.get("props"), dict)
+        and isinstance(env.get("meta"), dict)
+        and isinstance(env["meta"].get("layer"), str)
+        and isinstance(env["meta"].get("srid"), (int, type(None)))
+    ):
         raise ValueError("not a feature envelope")
     return env

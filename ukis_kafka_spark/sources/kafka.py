@@ -9,7 +9,8 @@ parquet twin. Everything downstream of the raw ``value binary`` column
 — ``decode_feature_stream``, the aggregates, the sinks — is one shared
 code path, byte-for-byte identical in both modes
 (streaming.jobs.src_kafka_shape drives it through the oracle gate
-offline).
+offline). ``decode_feature_stream`` is the only envelope decoder: the
+batch CLI consumers (``cli._decoded_features``) call it too.
 """
 
 from __future__ import annotations
@@ -68,8 +69,10 @@ def envelope_raw_stream(
 
 def decode_feature_stream(raw: DataFrame, include_geom: bool = True) -> DataFrame:
     """msgpack feature envelopes (``value binary``) → decoded feature
-    rows (layer, srid, geom_type, wkb, props_json). Shared by the Kafka
-    and file-twin sources — the decode is source-agnostic.
+    rows (layer, srid, geom_type, wkb, props_json), followed by every
+    other column of ``raw`` (e.g. the topic ``offset``) unchanged.
+    Shared by the Kafka and file-twin sources — the decode is
+    source-agnostic. A malformed envelope or WKB raises ``ValueError``.
 
     ``include_geom=False`` prunes the wkb payload INSIDE the kernel for
     consumers that only read properties (the geometry is still decoded
@@ -78,10 +81,13 @@ def decode_feature_stream(raw: DataFrame, include_geom: bool = True) -> DataFram
     per-row msgpack decode dominates — but payload-heavy geometries
     (polygons, multipart) are exactly what a property-only consumer
     should not ship."""
+    from pyspark.sql.types import BinaryType, IntegerType, StringType, StructField, StructType
+
     from .envelope import read_envelope
     from ..spatial.wkb import decode_wkb
 
     cols = ["layer", "srid", "geom_type"] + (["wkb"] if include_geom else []) + ["props_json"]
+    passthrough = [f for f in raw.schema.fields if f.name != "value"]
 
     def decode(iter_pdf):
         for pdf in iter_pdf:
@@ -95,23 +101,13 @@ def decode_feature_stream(raw: DataFrame, include_geom: bool = True) -> DataFram
                 if include_geom:
                     out["wkb"].append(env["geom"])
                 out["props_json"].append(json.dumps(env["props"], sort_keys=True))
+            for f in passthrough:
+                out[f.name] = pdf[f.name].to_numpy()
             yield pd.DataFrame(out)
 
-    schema = ", ".join(
-        f"{c} {'binary' if c == 'wkb' else 'int' if c == 'srid' else 'string'}" for c in cols
-    )
+    types = {"srid": IntegerType(), "wkb": BinaryType()}
+    schema = StructType([StructField(c, types.get(c, StringType())) for c in cols] + passthrough)
     return raw.mapInPandas(decode, schema)
-
-
-def kafka_feature_stream(
-    spark: SparkSession, brokers: str, topic: str, starting_offsets: str = "latest"
-) -> DataFrame:
-    """readStream from a topic of msgpack feature envelopes → decoded
-    feature rows (layer, srid, geom_type, wkb, props_json)."""
-    raw = envelope_raw_stream(
-        spark, brokers=brokers, topic=topic, starting_offsets=starting_offsets
-    )
-    return decode_feature_stream(raw)
 
 
 def write_features_to_kafka(

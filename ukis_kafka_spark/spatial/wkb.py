@@ -61,21 +61,32 @@ def encode_wkb(geom: Geometry) -> bytes:
 
 
 def decode_wkb(buf: bytes) -> Geometry:
-    """Decode WKB bytes (either byte order) to a geometry tuple."""
-    geom, offset = _decode_at(buf, 0)
+    """Decode WKB bytes (either byte order) to a geometry tuple.
+
+    Raises ``ValueError`` for any malformed input: truncated bytes, a
+    byte-order flag other than 0/1, an unknown geometry code, a Multi*
+    member that is not of the base type, or trailing bytes."""
+    try:
+        geom, offset = _decode_at(buf, 0)
+    except struct.error as exc:
+        raise ValueError(f"truncated WKB: {exc}") from None
     if offset != len(buf):
         raise ValueError(f"trailing bytes after geometry: {len(buf) - offset}")
     return geom
 
 
-def _decode_at(buf: bytes, off: int) -> tuple[Geometry, int]:
+def _decode_at(buf: bytes, off: int, expect: str | None = None) -> tuple[Geometry, int]:
     (order,) = struct.unpack_from("<B", buf, off)
+    if order > 1:
+        raise ValueError(f"bad WKB byte-order flag {order}")
     endian = "<" if order == 1 else ">"
     (code,) = struct.unpack_from(f"{endian}I", buf, off + 1)
     off += 5
     gtype = _CODE_TYPES.get(code)
     if gtype is None:
         raise ValueError(f"unknown WKB geometry code {code}")
+    if expect is not None and gtype != expect:
+        raise ValueError(f"{gtype} member where {expect} expected")
 
     def read_point(o: int) -> tuple[tuple[float, float], int]:
         x, y = struct.unpack_from(f"{endian}dd", buf, o)
@@ -110,7 +121,7 @@ def _decode_at(buf: bytes, off: int) -> tuple[Geometry, int]:
     off += 4
     members = []
     for _ in range(n):
-        member, off = _decode_at(buf, off)
+        member, off = _decode_at(buf, off, gtype[5:])
         members.append(member[1])
     return (gtype, tuple(members)), off
 
@@ -138,7 +149,7 @@ def validate_wkb(buf: bytes) -> str | None:
     minimum point counts (line ≥ 2, ring ≥ 4)."""
     try:
         geom = decode_wkb(buf)
-    except (ValueError, IndexError, struct.error) as exc:
+    except ValueError as exc:
         return f"undecodable: {exc}"
 
     def check(gtype: str, body) -> str | None:
