@@ -34,6 +34,12 @@ def test_cli_produce_consume_roundtrip(spark, tmp_path):
     out = str(tmp_path / "sink")
     table = str(tmp_path / "table")
 
+    # an empty input still leaves a readable topic
+    empty = tmp_path / "empty.geojson"
+    _write_geojson(empty, n=0)
+    assert cli.main(["produce", "--geojson", str(empty), "--topic-dir", topic]) == 0
+    assert spark.read.parquet(topic).count() == 0
+
     assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic, "--layer", "pts"]) == 0
     assert cli.main(["consume-files", "--topic-dir", topic, "--out", out]) == 0
 
@@ -129,21 +135,24 @@ def test_cli_consumers_read_topic_mixing_pre_offset_files(spark, tmp_path):
 
 
 def test_cli_consumers_spark_job_budget(spark, tmp_path):
-    """Each consumer decodes the topic once and counts with
-    Observations: a second decode pass or a re-read of the output for a
-    log line would push a command over its job budget (the counts
-    measured when the budget was set: 4 / 5 / 2)."""
+    """The producer writes with pyarrow and runs no Spark job, into a new
+    topic or an existing one. Each consumer decodes the topic once and
+    counts with Observations: a second decode pass or a re-read of the
+    output for a log line would push a command over its job budget (the
+    counts measured when the budget was set: 4 / 5 / 2)."""
     gj = tmp_path / "in.geojson"
     _write_geojson(gj, n=40, keyless={3, 17})
     topic = str(tmp_path / "topic")
     table = str(tmp_path / "table")
     out = str(tmp_path / "sink")
-    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+    produce = ["produce", "--geojson", str(gj), "--topic-dir", topic]
 
     sc = spark.sparkContext
     jobs = {}
     try:
         for name, argv in [
+            ("produce_new_topic", produce),
+            ("produce_existing_topic", produce),
             ("upsert_new_table", ["consume-upsert", "--topic-dir", topic, "--table", table]),
             ("upsert_existing_table", ["consume-upsert", "--topic-dir", topic, "--table", table]),
             ("files", ["consume-files", "--topic-dir", topic, "--out", out]),
@@ -155,10 +164,72 @@ def test_cli_consumers_spark_job_budget(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    assert jobs["produce_new_topic"] == jobs["produce_existing_topic"] == 0, jobs
     assert jobs["upsert_new_table"] <= 4, jobs
     assert jobs["upsert_existing_table"] <= 5, jobs
     assert jobs["files"] <= 2, jobs
     assert spark.read.parquet(table).count() == 38
+
+
+def test_cli_produce_rejects_unsupported_geometry(tmp_path):
+    """The codec rejects a geometry type it cannot encode with
+    ``ValueError`` before anything reaches the topic."""
+    import pytest
+
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=3)
+    fc = json.loads(gj.read_text())
+    fc["features"][1]["geometry"] = {
+        "type": "GeometryCollection",
+        "geometries": [{"type": "Point", "coordinates": [1.0, 2.0]}],
+    }
+    gj.write_text(json.dumps(fc))
+    topic = tmp_path / "topic"
+    with pytest.raises(ValueError, match="GEOMETRYCOLLECTION"):
+        cli.main(["produce", "--geojson", str(gj), "--topic-dir", str(topic)])
+    assert not topic.exists()
+
+
+def test_cli_concurrent_producers_get_disjoint_offsets(spark, tmp_path):
+    """Four producer processes append to one topic at once. Each starts
+    no JVM; all succeed; the offsets are exactly ``0..total-1`` and every
+    envelope arrives once."""
+    import os
+    import subprocess
+    import sys
+
+    from ukis_kafka_spark.sources.envelope import make_envelope
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]))
+    code = (
+        "import sys\n"
+        "from ukis_kafka_spark import cli\n"
+        "rc = cli.main(sys.argv[1:])\n"
+        "from pyspark import SparkContext\n"
+        "assert SparkContext._active_spark_context is None\n"
+        "sys.exit(rc)\n"
+    )
+    topic = str(tmp_path / "topic")
+    n, producers = 2000, 4
+    want = []
+    procs = []
+    for p in range(producers):
+        gj = tmp_path / f"in{p}.geojson"
+        _write_geojson(gj, n=n, start=p * n)
+        for f in json.loads(gj.read_text())["features"]:
+            wkb = cli._geojson_geom_to_wkb(f["geometry"])
+            want.append(make_envelope(wkb, f["properties"], layer=f"l{p}", srid=4326))
+        argv = ["produce", "--geojson", str(gj), "--topic-dir", topic, "--layer", f"l{p}"]
+        procs.append(
+            subprocess.Popen([sys.executable, "-c", code, *argv], env=env, stderr=subprocess.PIPE, text=True)
+        )
+    errs = [proc.communicate(timeout=600)[1] for proc in procs]
+    assert [proc.returncode for proc in procs] == [0] * producers, [e[-500:] for e in errs]
+
+    rows = spark.read.parquet(topic).collect()
+    assert sorted(r["offset"] for r in rows) == list(range(n * producers))
+    assert sorted(bytes(r["value"]) for r in rows) == sorted(want)
 
 
 def test_pipeline_demo_runs(spark):

@@ -711,3 +711,45 @@ def test_kafka_source_online(spark):
     assert {k: (n, round(s, 6)) for k, (n, s) in got.items()} == {
         k: (n, round(s, 6)) for k, (n, s) in want.items()
     }
+
+
+def test_stream_reads_topic_written_by_produce(spark, tmp_path):
+    """Two ``cli produce`` calls into one topic, then the file-stream
+    twin drains it with ``availableNow``: every feature arrives, so the
+    producer's lock file and hidden temp names are never read as data."""
+    import json
+
+    from ukis_kafka_spark import cli
+    from ukis_kafka_spark.sources.kafka import decode_feature_stream, envelope_raw_stream
+
+    topic = str(tmp_path / "topic")
+    fids = []
+    for batch in range(2):
+        feats = [
+            {
+                "type": "Feature",
+                "geometry": {"type": "Point", "coordinates": [float(i), float(batch)]},
+                "properties": {"fid": 100 * batch + i},
+            }
+            for i in range(7)
+        ]
+        fids += [f["properties"]["fid"] for f in feats]
+        gj = tmp_path / f"in{batch}.geojson"
+        gj.write_text(json.dumps({"type": "FeatureCollection", "features": feats}))
+        assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic, "--layer", "pts"]) == 0
+
+    q = (
+        decode_feature_stream(envelope_raw_stream(spark, wire_dir=topic))
+        .writeStream.format("memory")
+        .queryName("produced_topic_stream")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    rows = spark.sql("SELECT layer, props_json FROM produced_topic_stream").collect()
+    assert sorted(json.loads(r["props_json"])["fid"] for r in rows) == sorted(fids)
+    assert {r["layer"] for r in rows} == {"pts"}

@@ -17,4 +17,11 @@ Design notes (see SURVEY.md):
 
 __version__ = "0.1.0"
 
-from .registry import QUERIES, ORACLE, query  # noqa: F401
+
+def __getattr__(name):
+    # loaded on first use, so the producer CLI imports without pyspark
+    if name in ("QUERIES", "ORACLE", "query"):
+        from . import registry
+
+        return getattr(registry, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -3,8 +3,9 @@ CLIs (SURVEY.md §3.1: producer vector-file→Kafka, consumer
 Kafka→PostGIS, consumer Kafka→filesystem), re-based on Spark.
 
 Offline, a "topic" is a directory of parquet files holding the binary
-``value`` column (the exact Kafka message shape); with a broker, swap
-the directory for ``format("kafka")`` via sources.kafka.
+``value`` column (the exact Kafka message shape) and its ``offset``;
+with a broker, swap the directory for ``format("kafka")`` via
+sources.kafka.
 
     python -m ukis_kafka_spark.cli produce  --geojson in.geojson --topic-dir /x/topic --layer roads
     python -m ukis_kafka_spark.cli produce-wkt --csv in.csv --wkt-col WKT --topic-dir /x/topic --layer roads
@@ -14,7 +15,8 @@ the directory for ``format("kafka")`` via sources.kafka.
 The producer reads GeoJSON with the stdlib (the reference uses OGR;
 GeoJSON is the library-free common denominator), converts geometries
 to WKB with the pure-Python codec, and wraps each feature in the
-msgpack envelope. Consumers decode with the one envelope kernel,
+msgpack envelope. Producers write topic files with pyarrow under a
+lock and start no JVM. Consumers decode with the one envelope kernel,
 ``sources.kafka.decode_feature_stream``, and run the R7/R8 sinks.
 """
 
@@ -24,34 +26,16 @@ import argparse
 import json
 import sys
 
-import pandas as pd
-
 
 def _geojson_geom_to_wkb(geom: dict) -> bytes:
     from .spatial.wkb import encode_wkb
 
-    t = geom["type"].upper()
-    c = geom["coordinates"]
-    if t == "POINT":
-        return encode_wkb(("POINT", tuple(c)))
-    if t == "LINESTRING":
-        return encode_wkb(("LINESTRING", tuple(tuple(p) for p in c)))
-    if t == "POLYGON":
-        return encode_wkb(("POLYGON", tuple(tuple(tuple(p) for p in ring) for ring in c)))
-    if t == "MULTIPOINT":
-        return encode_wkb(("MULTIPOINT", tuple(tuple(p) for p in c)))
-    if t == "MULTILINESTRING":
-        return encode_wkb(("MULTILINESTRING", tuple(tuple(tuple(p) for p in ls) for ls in c)))
-    if t == "MULTIPOLYGON":
-        return encode_wkb(
-            ("MULTIPOLYGON", tuple(tuple(tuple(tuple(p) for p in ring) for ring in poly) for poly in c))
-        )
-    raise ValueError(f"unsupported GeoJSON geometry type: {t}")
+    # a GeometryCollection has no "coordinates"; the codec rejects its type
+    return encode_wkb((geom["type"].upper(), geom.get("coordinates")))
 
 
 def cmd_produce(args: argparse.Namespace) -> int:
     """R1+R2: vector file → feature envelopes → topic dir."""
-    from .plans import get_spark
     from .sources.envelope import make_envelope
 
     with open(args.geojson) as fh:
@@ -70,25 +54,51 @@ def cmd_produce(args: argparse.Namespace) -> int:
 def _publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
     """Append envelopes to the topic dir with monotonic per-message
     offsets (Kafka-offset parity): continue from the existing topic
-    size so re-delivered keys keep produce order."""
+    size so re-delivered keys keep produce order.
+
+    Written with pyarrow under an exclusive lock on ``_produce.lock``;
+    no JVM starts. The next offset is the row count in the footers of
+    the topic's visible files, so concurrent producers get disjoint,
+    gap-free offsets. The envelopes land as ``value binary, offset
+    long`` in contiguous slices, one per local core (the read
+    parallelism of a consumer), each named by its first offset and
+    renamed in from a hidden temp name: Spark's readers skip names
+    starting with ``_`` or ``.``, so they never see the lock or a
+    half-written file."""
+    import fcntl
     import os
 
-    from .plans import get_spark
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    spark = get_spark("cli-produce")
-    base_off = 0
-    if os.path.isdir(topic_dir):
-        base_off = spark.read.parquet(topic_dir).count()
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "value": pd.Series(envelopes, dtype=object),
-                "offset": range(base_off, base_off + len(envelopes)),
-            }
-        ),
-        schema="value binary, offset long",
-    )
-    df.write.mode("append").parquet(topic_dir)
+    from .plans.session import local_cpus
+
+    os.makedirs(topic_dir, exist_ok=True)
+    with open(os.path.join(topic_dir, "_produce.lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        base_off = sum(
+            pq.read_metadata(os.path.join(topic_dir, name)).num_rows
+            for name in os.listdir(topic_dir)
+            if not name.startswith(("_", "."))
+        )
+
+        def write(lo: int, hi: int, name: str) -> None:
+            table = pa.table(
+                {
+                    "value": pa.array(envelopes[lo:hi], pa.binary()),
+                    "offset": pa.array(range(base_off + lo, base_off + hi), pa.int64()),
+                }
+            )
+            tmp = os.path.join(topic_dir, f".{name}.tmp")
+            pq.write_table(table, tmp)
+            os.rename(tmp, os.path.join(topic_dir, name))
+
+        n, k = len(envelopes), local_cpus()
+        cuts = sorted({i * n // k for i in range(k + 1)})
+        for lo, hi in zip(cuts, cuts[1:]):
+            write(lo, hi, f"part-{base_off + lo:020d}.parquet")
+        if not n:  # schema only, as a Spark append writes: keeps a new topic readable
+            write(0, 0, f"part-{base_off:020d}-empty.parquet")
     print(f"produced {len(envelopes)} features to {topic_dir}")
 
 
@@ -270,21 +280,12 @@ _GEOJSON_TYPE = {
 
 def _wkb_to_geojson_geom(buf: bytes) -> dict:
     """Inverse of :func:`_geojson_geom_to_wkb` — WKB bytes back to a
-    GeoJSON geometry dict (coordinate tuples become lists)."""
+    GeoJSON geometry dict (coordinates stay tuples, which ``json.dumps``
+    writes as lists)."""
     from .spatial.wkb import decode_wkb
 
     t, c = decode_wkb(buf)
-    if t == "POINT":
-        coords = list(c)
-    elif t in ("LINESTRING", "MULTIPOINT"):
-        coords = [list(p) for p in c]
-    elif t in ("POLYGON", "MULTILINESTRING"):
-        coords = [[list(p) for p in ring] for ring in c]
-    elif t == "MULTIPOLYGON":
-        coords = [[[list(p) for p in ring] for ring in poly] for poly in c]
-    else:  # decode_wkb only emits the six types above
-        raise ValueError(f"unsupported WKB geometry type: {t}")
-    return {"type": _GEOJSON_TYPE[t], "coordinates": coords}
+    return {"type": _GEOJSON_TYPE[t], "coordinates": c}
 
 
 def cmd_consume_geojson(args: argparse.Namespace) -> int:
@@ -294,6 +295,7 @@ def cmd_consume_geojson(args: argparse.Namespace) -> int:
     ``--collection`` assembles a single FeatureCollection file on the
     driver instead (offset-ordered, deterministic) — only for exports
     small enough to want one file."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from .plans import get_spark

@@ -14,13 +14,22 @@ declarative plan that AQE re-sizes at runtime.
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import SparkSession
+
+
+def local_cpus() -> int:
+    """Cores a local session runs on: ``SPARK_GRAFT_CPUS``, else all."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 def get_spark(app_name: str = "ukis-kafka-spark", cpus: int | None = None) -> SparkSession:
+    from pyspark.sql import SparkSession
+
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        cpus = local_cpus()
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -39,9 +39,14 @@ def _pack_point(x: float, y: float) -> bytes:
 
 
 def encode_wkb(geom: Geometry) -> bytes:
-    """Encode a geometry tuple as little-endian WKB."""
+    """Encode a geometry tuple as little-endian WKB. Coordinates may be
+    tuples or lists (GeoJSON's nested arrays encode as they are).
+
+    Raises ``ValueError`` for a geometry type name outside the six above."""
     gtype, body = geom
-    code = _TYPE_CODES[gtype]
+    code = _TYPE_CODES.get(gtype)
+    if code is None:
+        raise ValueError(f"unsupported geometry type: {gtype}")
     out = [struct.pack("<BI", 1, code)]  # byte order 1 = little-endian
     if gtype == "POINT":
         out.append(_pack_point(*body))
