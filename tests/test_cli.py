@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from ukis_kafka_spark import cli
+from ukis_kafka_spark.sources.envelope import read_envelope
 
 
 def _write_geojson(path, n=5, start=0, keyless=()):
@@ -137,9 +140,10 @@ def test_cli_consumers_read_topic_mixing_pre_offset_files(spark, tmp_path):
 def test_cli_consumers_spark_job_budget(spark, tmp_path):
     """The producer writes with pyarrow and runs no Spark job, into a new
     topic or an existing one. Each consumer decodes the topic once and
-    counts with Observations: a second decode pass or a re-read of the
-    output for a log line would push a command over its job budget (the
-    counts measured when the budget was set: 4 / 5 / 2)."""
+    counts with Observations: a second decode pass, a second window in
+    the merge, or a re-read of the output for a log line would push a
+    command over its job budget (the counts measured when the budget was
+    set: 3 / 4 / 2)."""
     gj = tmp_path / "in.geojson"
     _write_geojson(gj, n=40, keyless={3, 17})
     topic = str(tmp_path / "topic")
@@ -165,29 +169,54 @@ def test_cli_consumers_spark_job_budget(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert jobs["produce_new_topic"] == jobs["produce_existing_topic"] == 0, jobs
-    assert jobs["upsert_new_table"] <= 4, jobs
-    assert jobs["upsert_existing_table"] <= 5, jobs
+    assert jobs["upsert_new_table"] <= 3, jobs
+    assert jobs["upsert_existing_table"] <= 4, jobs
     assert jobs["files"] <= 2, jobs
     assert spark.read.parquet(table).count() == 38
 
 
-def test_cli_produce_rejects_unsupported_geometry(tmp_path):
-    """The codec rejects a geometry type it cannot encode with
-    ``ValueError`` before anything reaches the topic."""
-    import pytest
-
+@pytest.mark.parametrize(
+    "geometry, match",
+    [
+        (
+            {"type": "GeometryCollection", "geometries": [{"type": "Point", "coordinates": [1.0, 2.0]}]},
+            "GEOMETRYCOLLECTION",
+        ),
+        ({"type": "Point", "coordinates": [1.0, 2.0, 3.0]}, r"two numbers, got \[1\.0, 2\.0, 3\.0\]"),
+    ],
+    ids=["geometry_collection", "point_3d"],
+)
+def test_cli_produce_rejects_unsupported_geometry(tmp_path, geometry, match):
+    """The codec rejects a geometry it cannot encode (a type outside
+    the six, or a position that is not two numbers) with ``ValueError``
+    before anything reaches the topic."""
     gj = tmp_path / "in.geojson"
     _write_geojson(gj, n=3)
     fc = json.loads(gj.read_text())
-    fc["features"][1]["geometry"] = {
-        "type": "GeometryCollection",
-        "geometries": [{"type": "Point", "coordinates": [1.0, 2.0]}],
-    }
+    fc["features"][1]["geometry"] = geometry
     gj.write_text(json.dumps(fc))
     topic = tmp_path / "topic"
-    with pytest.raises(ValueError, match="GEOMETRYCOLLECTION"):
+    with pytest.raises(ValueError, match=match):
         cli.main(["produce", "--geojson", str(gj), "--topic-dir", str(topic)])
     assert not topic.exists()
+
+
+def test_cli_produce_skips_null_geometry(tmp_path, capsys):
+    """A GeoJSON feature with ``"geometry": null`` (RFC 7946 §3.2) is
+    skipped and counted, as the shp/gpkg null shapes are."""
+    import pyarrow.parquet as pq
+
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=5)
+    fc = json.loads(gj.read_text())
+    fc["features"][2]["geometry"] = None
+    gj.write_text(json.dumps(fc))
+    topic = str(tmp_path / "topic")
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+    assert "warning: skipped 1 features without geometry" in capsys.readouterr().out
+    rows = pq.read_table(topic).to_pylist()
+    assert sorted(r["offset"] for r in rows) == [0, 1, 2, 3]
+    assert sorted(read_envelope(r["value"])["props"]["fid"] for r in rows) == [0, 1, 3, 4]
 
 
 def test_cli_concurrent_producers_get_disjoint_offsets(spark, tmp_path):
@@ -199,6 +228,7 @@ def test_cli_concurrent_producers_get_disjoint_offsets(spark, tmp_path):
     import sys
 
     from ukis_kafka_spark.sources.envelope import make_envelope
+    from ukis_kafka_spark.spatial.wkb import encode_wkb
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, PYTHONPATH=os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]))
@@ -218,7 +248,7 @@ def test_cli_concurrent_producers_get_disjoint_offsets(spark, tmp_path):
         gj = tmp_path / f"in{p}.geojson"
         _write_geojson(gj, n=n, start=p * n)
         for f in json.loads(gj.read_text())["features"]:
-            wkb = cli._geojson_geom_to_wkb(f["geometry"])
+            wkb = encode_wkb((f["geometry"]["type"].upper(), f["geometry"]["coordinates"]))
             want.append(make_envelope(wkb, f["properties"], layer=f"l{p}", srid=4326))
         argv = ["produce", "--geojson", str(gj), "--topic-dir", topic, "--layer", f"l{p}"]
         procs.append(
@@ -342,6 +372,23 @@ def test_cli_produce_gpkg_roundtrip(spark, tmp_path):
     by_rid = {json.loads(r["props_json"])["rid"]: r for r in rows}
     assert decode_wkb(bytes(by_rid[2]["wkb"])) == ("POINT", (10.5, 50.25))
     assert json.loads(by_rid[1]["props_json"])["name"] == "a"
+
+
+@pytest.mark.parametrize("argv, want", [([], 0), (["--srid", "4326"], 4326)], ids=["layer_srs_id", "srid_override"])
+def test_cli_produce_gpkg_srid_resolution(tmp_path, argv, want):
+    """``--srid`` overrides the layer SRS id; without it the SRS id
+    rides the envelope even when it is 0 (a valid GPKG id, "undefined
+    geographic"), not the 4326 fallback."""
+    import pyarrow.parquet as pq
+
+    from ukis_kafka_spark.sources.gpkg import write_gpkg
+
+    gpkg = tmp_path / "z.gpkg"
+    write_gpkg(str(gpkg), "z", [(("POINT", (1.0, 2.0)), {"k": 1})], srid=0)
+    topic = tmp_path / "topic"
+    assert cli.main(["produce-gpkg", "--gpkg", str(gpkg), "--topic-dir", str(topic), *argv]) == 0
+    values = pq.read_table(str(topic), columns=["value"])["value"].to_pylist()
+    assert [read_envelope(v)["meta"]["srid"] for v in values] == [want]
 
 
 def test_cli_produce_gpkg_layer_selection(tmp_path, capsys):

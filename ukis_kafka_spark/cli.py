@@ -13,10 +13,14 @@ sources.kafka.
     python -m ukis_kafka_spark.cli consume-upsert --topic-dir /x/topic --table /x/table --key fid
 
 The producer reads GeoJSON with the stdlib (the reference uses OGR;
-GeoJSON is the library-free common denominator), converts geometries
-to WKB with the pure-Python codec, and wraps each feature in the
-msgpack envelope. Producers write topic files with pyarrow under a
-lock and start no JVM. Consumers decode with the one envelope kernel,
+GeoJSON is the library-free common denominator), CSV-with-WKT,
+Shapefile or GeoPackage. Each command is only its reader: one loop,
+``_produce``, converts every geometry to WKB with the pure-Python
+codec and wraps the feature in the msgpack envelope. A feature with no
+geometry is skipped and counted in one warning line. Positions are 2D:
+a position that is not two numbers (e.g. a GeoJSON altitude) raises
+``ValueError``. Producers write topic files with pyarrow under a lock
+and start no JVM. Consumers decode with the one envelope kernel,
 ``sources.kafka.decode_feature_stream``, and run the R7/R8 sinks.
 """
 
@@ -27,28 +31,45 @@ import json
 import sys
 
 
-def _geojson_geom_to_wkb(geom: dict) -> bytes:
+def _produce(features, args: argparse.Namespace) -> int:
+    """The one feature → envelope loop of every ``produce*`` command.
+
+    ``features`` yields ``(geometry tuple or None, props, SRS id or
+    None)``. A feature without geometry is skipped and counted. The
+    envelope SRID is ``--srid`` if given, else the reader's SRS id,
+    else 4326 (``is None`` tests: GPKG SRS ids 0 and -1 are valid)."""
+    from .sources.envelope import make_envelope
     from .spatial.wkb import encode_wkb
 
-    # a GeometryCollection has no "coordinates"; the codec rejects its type
-    return encode_wkb((geom["type"].upper(), geom.get("coordinates")))
+    envelopes, skipped = [], 0
+    for geom, props, srs_id in features:
+        if geom is None:
+            skipped += 1
+            continue
+        srid = srs_id if args.srid is None else args.srid
+        srid = 4326 if srid is None else srid
+        envelopes.append(make_envelope(encode_wkb(geom), props, layer=args.layer, srid=srid))
+    if skipped:
+        print(f"warning: skipped {skipped} features without geometry")
+    _publish_envelopes(envelopes, args.topic_dir)
+    return 0
 
 
 def cmd_produce(args: argparse.Namespace) -> int:
-    """R1+R2: vector file → feature envelopes → topic dir."""
-    from .sources.envelope import make_envelope
-
+    """R1+R2: GeoJSON file → feature envelopes → topic dir. A null
+    geometry (RFC 7946 §3.2) is skipped; a GeometryCollection, which
+    has no ``coordinates``, is rejected by the codec."""
     with open(args.geojson) as fh:
         fc = json.load(fh)
     feats = fc["features"] if fc.get("type") == "FeatureCollection" else [fc]
-    envelopes = []
-    for f in feats:
-        props = {k: v for k, v in (f.get("properties") or {}).items()}
-        envelopes.append(
-            make_envelope(_geojson_geom_to_wkb(f["geometry"]), props, layer=args.layer, srid=args.srid)
-        )
-    _publish_envelopes(envelopes, args.topic_dir)
-    return 0
+
+    def read():
+        for f in feats:
+            g = f["geometry"]
+            geom = None if g is None else (g["type"].upper(), g.get("coordinates"))
+            yield geom, f.get("properties") or {}, None
+
+    return _produce(read(), args)
 
 
 def _publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
@@ -133,41 +154,30 @@ def cmd_produce_wkt(args: argparse.Namespace) -> int:
     ingestion gap without OGR itself being importable offline."""
     import csv
 
-    from .sources.envelope import make_envelope
-    from .spatial.wkb import encode_wkb
     from .spatial.wkt import parse_wkt
 
-    envelopes = []
     with open(args.csv, newline="") as fh:
         reader = csv.DictReader(fh)
         if args.wkt_col not in (reader.fieldnames or []):
             print(f"error: no column {args.wkt_col!r} in {args.csv}", file=sys.stderr)
             return 2
-        for row in reader:
-            wkb = encode_wkb(parse_wkt(row[args.wkt_col]))
-            props = {k: _coerce_prop(v) for k, v in row.items() if k != args.wkt_col}
-            envelopes.append(make_envelope(wkb, props, layer=args.layer, srid=args.srid))
-    _publish_envelopes(envelopes, args.topic_dir)
-    return 0
+
+        def read():
+            for row in reader:
+                geom = parse_wkt(row[args.wkt_col])
+                yield geom, {k: _coerce_prop(v) for k, v in row.items() if k != args.wkt_col}, None
+
+        return _produce(read(), args)
 
 
 def cmd_produce_shp(args: argparse.Namespace) -> int:
     """R1+R2 (third ingestion format): ESRI Shapefile → envelope topic,
     via the pure-Python .shp/.dbf reader (sources.shapefile) — the
-    native OGR format closest to the reference's default ingest."""
-    from .sources.envelope import make_envelope
+    native OGR format closest to the reference's default ingest. Null
+    shapes keep .dbf alignment and are skipped."""
     from .sources.shapefile import read_shapefile
-    from .spatial.wkb import encode_wkb
 
-    envelopes = []
-    for geom, props in read_shapefile(args.shp):
-        if geom is None:  # Null shape: keeps .dbf alignment, nothing to publish
-            continue
-        envelopes.append(
-            make_envelope(encode_wkb(geom), props, layer=args.layer, srid=args.srid)
-        )
-    _publish_envelopes(envelopes, args.topic_dir)
-    return 0
+    return _produce(((geom, props, None) for geom, props in read_shapefile(args.shp)), args)
 
 
 def cmd_produce_gpkg(args: argparse.Namespace) -> int:
@@ -176,24 +186,9 @@ def cmd_produce_gpkg(args: argparse.Namespace) -> int:
     cells are header-wrapped standard WKB, re-encoded through the same
     codec every other producer uses. The per-layer SRS id from
     gpkg_geometry_columns rides the envelope unless --srid overrides."""
-    from .sources.envelope import make_envelope
     from .sources.gpkg import read_gpkg
-    from .spatial.wkb import encode_wkb
 
-    envelopes = []
-    for geom, props, srs_id in read_gpkg(args.gpkg, layer=args.gpkg_layer):
-        if geom is None:  # NULL / empty geometry keeps fid alignment only
-            continue
-        envelopes.append(
-            make_envelope(
-                encode_wkb(geom),
-                props,
-                layer=args.layer,
-                srid=args.srid if args.srid is not None else srs_id,
-            )
-        )
-    _publish_envelopes(envelopes, args.topic_dir)
-    return 0
+    return _produce(read_gpkg(args.gpkg, layer=args.gpkg_layer), args)
 
 
 def _decoded_features(spark, topic_dir: str):
@@ -279,9 +274,9 @@ _GEOJSON_TYPE = {
 
 
 def _wkb_to_geojson_geom(buf: bytes) -> dict:
-    """Inverse of :func:`_geojson_geom_to_wkb` — WKB bytes back to a
-    GeoJSON geometry dict (coordinates stay tuples, which ``json.dumps``
-    writes as lists)."""
+    """Inverse of the geometry reading in :func:`cmd_produce` — WKB
+    bytes back to a GeoJSON geometry dict (coordinates stay tuples,
+    which ``json.dumps`` writes as lists)."""
     from .spatial.wkb import decode_wkb
 
     t, c = decode_wkb(buf)
@@ -344,35 +339,21 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="ukis_kafka_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    pp = sub.add_parser("produce", help="GeoJSON file → envelope topic dir (R1+R2)")
-    pp.add_argument("--geojson", required=True)
-    pp.add_argument("--topic-dir", required=True)
-    pp.add_argument("--layer", default="default")
-    pp.add_argument("--srid", type=int, default=4326)
-    pp.set_defaults(fn=cmd_produce)
+    def producer(name: str, source: str, fn, what: str) -> argparse.ArgumentParser:
+        sp = sub.add_parser(name, help=f"{what} → envelope topic dir (R1+R2)")
+        sp.add_argument(source, required=True)
+        sp.add_argument("--topic-dir", required=True)
+        sp.add_argument("--layer", default="default", help="envelope layer tag")
+        sp.add_argument("--srid", type=int, default=None, help="default: the source's SRS id, else 4326")
+        sp.set_defaults(fn=fn)
+        return sp
 
-    pw = sub.add_parser("produce-wkt", help="CSV with WKT column → envelope topic dir (R1+R2)")
-    pw.add_argument("--csv", required=True)
-    pw.add_argument("--topic-dir", required=True)
+    producer("produce", "--geojson", cmd_produce, "GeoJSON file")
+    pw = producer("produce-wkt", "--csv", cmd_produce_wkt, "CSV with WKT column")
     pw.add_argument("--wkt-col", default="WKT")
-    pw.add_argument("--layer", default="default")
-    pw.add_argument("--srid", type=int, default=4326)
-    pw.set_defaults(fn=cmd_produce_wkt)
-
-    ps = sub.add_parser("produce-shp", help="ESRI Shapefile → envelope topic dir (R1+R2)")
-    ps.add_argument("--shp", required=True)
-    ps.add_argument("--topic-dir", required=True)
-    ps.add_argument("--layer", default="default")
-    ps.add_argument("--srid", type=int, default=4326)
-    ps.set_defaults(fn=cmd_produce_shp)
-
-    pg = sub.add_parser("produce-gpkg", help="GeoPackage layer → envelope topic dir (R1+R2)")
-    pg.add_argument("--gpkg", required=True)
-    pg.add_argument("--topic-dir", required=True)
+    producer("produce-shp", "--shp", cmd_produce_shp, "ESRI Shapefile")
+    pg = producer("produce-gpkg", "--gpkg", cmd_produce_gpkg, "GeoPackage layer")
     pg.add_argument("--gpkg-layer", default=None, help="feature table (default: the only one)")
-    pg.add_argument("--layer", default="default", help="envelope layer tag")
-    pg.add_argument("--srid", type=int, default=None, help="override the layer SRS id")
-    pg.set_defaults(fn=cmd_produce_gpkg)
 
     pf = sub.add_parser("consume-files", help="topic dir → partitioned files (R8)")
     pf.add_argument("--topic-dir", required=True)

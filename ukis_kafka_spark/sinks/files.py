@@ -21,10 +21,6 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..sources import load_table
 
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp"
-)
-
 
 def _scratch_dir() -> str:
     from ..cache import fast_scratch_root
@@ -51,29 +47,30 @@ def upsert_parquet(
     offset-order last-write-wins. Without ``seq_col``, updates must be
     key-unique; ties would otherwise pick an arbitrary row.
 
-    Implementation: tag priority → union → keep rank-1 per key →
-    write to a fresh directory → two-rename swap. The swap is not
-    atomic for concurrent readers (that needs a metastore / Delta log);
-    it is crash-safe: the previous table survives at ``path + '._old'``
-    until the new one is in place, so no crash point loses data, and
-    the target is absent only for the duration of one directory rename
-    (never a recursive delete)."""
+    Implementation: tag priority (updates 0, base 1) → union → rank
+    each key once by (priority asc, ``seq_col`` desc) → keep rank 1 →
+    write to a fresh directory → two-rename swap. One window, so one
+    shuffle: ``base`` gets a NULL ``seq_col`` of the updates' type, so
+    the union stays strict by name, and NULL sequences sort last. The
+    swap is not atomic for concurrent readers (that needs a metastore /
+    Delta log); it is crash-safe: the previous table survives at
+    ``path + '._old'`` until the new one is in place, so no crash point
+    loses data, and the target is absent only for the duration of one
+    directory rename (never a recursive delete)."""
+    order, helper_cols = [F.col("_prio").asc()], ["_prio", "_rn"]
     if seq_col is not None:
-        w_u = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc())
-        updates = (
-            updates.withColumn("_urn", F.row_number().over(w_u))
-            .where(F.col("_urn") == 1)
-            .drop("_urn", seq_col)
-        )
+        base = base.withColumn(seq_col, F.lit(None).cast(updates.schema[seq_col].dataType))
+        order.append(F.col(seq_col).desc())
+        helper_cols.append(seq_col)
     tagged = base.withColumn("_prio", F.lit(1)).unionByName(
         updates.withColumn("_prio", F.lit(0))
     )
-    w = Window.partitionBy(*keys).orderBy(F.col("_prio").asc())
+    w = Window.partitionBy(*keys).orderBy(*order)
     written = Observation()
     merged = (
         tagged.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .drop("_prio", "_rn")
+        .drop(*helper_cols)
         .observe(written, F.count(F.lit(1)).alias("n"))
     )
     tmp, old = path + "._new", path + "._old"

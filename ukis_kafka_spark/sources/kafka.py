@@ -1,11 +1,14 @@
-"""Kafka source/sink wiring (reference parity R2/R3 online path).
+"""Kafka source wiring (reference parity R2/R3 online path).
 
 No broker (and no spark-sql-kafka connector jar) exists in the offline
-harness, so these builders are exercised there through their file-based
-twins. The selectable entry point is ``envelope_raw_stream``: set
-``UKIS_KAFKA_BROKERS`` (or pass ``brokers=``) and the SAME pipeline
-reads ``format("kafka")``; leave it unset and it reads the wire-format
-parquet twin. Everything downstream of the raw ``value binary`` column
+harness, so the source is exercised there through its file-based twin.
+Producing needs no code here: the CLI producers write the topic
+directory's parquet files, and online a broker takes the same envelope
+bytes from Spark's own Kafka sink (``write.format("kafka")``) or any
+Kafka producer client. The selectable entry point is
+``envelope_raw_stream``: set ``UKIS_KAFKA_BROKERS`` (or pass
+``brokers=``) and the SAME pipeline reads ``format("kafka")``; leave it
+unset and it reads the wire-format parquet twin. Everything downstream of the raw ``value binary`` column
 — ``decode_feature_stream``, the aggregates, the sinks — is one shared
 code path, byte-for-byte identical in both modes
 (streaming.jobs.src_kafka_shape drives it through the oracle gate
@@ -109,29 +112,3 @@ def decode_feature_stream(raw: DataFrame, include_geom: bool = True) -> DataFram
     schema = StructType([StructField(c, types.get(c, StringType())) for c in cols] + passthrough)
     return raw.mapInPandas(decode, schema)
 
-
-def write_features_to_kafka(
-    features: DataFrame, brokers: str, topic: str, checkpoint: str
-):
-    """writeStream of (wkb, props_json, layer, srid) feature rows as
-    msgpack envelopes to a topic. Returns the StreamingQuery."""
-    from .envelope import make_envelope
-
-    def encode(iter_pdf):
-        for pdf in iter_pdf:
-            vals = [
-                make_envelope(
-                    bytes(r.wkb), json.loads(r.props_json), layer=r.layer, srid=int(r.srid)
-                )
-                for r in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame({"value": pd.Series(vals, dtype=object)})
-
-    wire = features.mapInPandas(encode, "value binary")
-    return (
-        wire.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

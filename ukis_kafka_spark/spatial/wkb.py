@@ -34,30 +34,37 @@ _TYPE_CODES = {
 _CODE_TYPES = {v: k for k, v in _TYPE_CODES.items()}
 
 
-def _pack_point(x: float, y: float) -> bytes:
-    return struct.pack("<dd", x, y)
+def _pack_point(pt) -> bytes:
+    # one pack per position, so every position is checked for exactly two numbers
+    try:
+        x, y = pt
+        return struct.pack("<dd", x, y)
+    except (TypeError, ValueError, struct.error):
+        raise ValueError(f"position must be two numbers, got {pt!r}") from None
 
 
 def encode_wkb(geom: Geometry) -> bytes:
     """Encode a geometry tuple as little-endian WKB. Coordinates may be
     tuples or lists (GeoJSON's nested arrays encode as they are).
 
-    Raises ``ValueError`` for a geometry type name outside the six above."""
+    Raises ``ValueError`` for a geometry type name outside the six
+    above, or for a position that is not exactly two numbers (a 3D
+    ``[x, y, z]``, a 1-element position, a non-numeric value)."""
     gtype, body = geom
     code = _TYPE_CODES.get(gtype)
     if code is None:
         raise ValueError(f"unsupported geometry type: {gtype}")
     out = [struct.pack("<BI", 1, code)]  # byte order 1 = little-endian
     if gtype == "POINT":
-        out.append(_pack_point(*body))
+        out.append(_pack_point(body))
     elif gtype == "LINESTRING":
         out.append(struct.pack("<I", len(body)))
-        out.extend(_pack_point(*pt) for pt in body)
+        out.extend(_pack_point(pt) for pt in body)
     elif gtype == "POLYGON":
         out.append(struct.pack("<I", len(body)))
         for ring in body:
             out.append(struct.pack("<I", len(ring)))
-            out.extend(_pack_point(*pt) for pt in ring)
+            out.extend(_pack_point(pt) for pt in ring)
     else:  # MULTI*: members are full WKB geometries of the base type
         base = gtype[5:]
         out.append(struct.pack("<I", len(body)))

@@ -13,7 +13,7 @@ production source; a file stream delivers the same (value: binary)
 rows without a broker. ``src_kafka_shape`` runs the full wire path:
 feature → msgpack envelope bytes → stream → decode → aggregate.
 
-Scratch space lives under the repo (.tmp/, gitignored) and is removed
+Scratch space comes from ``cache.fast_scratch_root`` and is removed
 after each run.
 """
 
@@ -31,8 +31,6 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp")
 
 _EVENT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
