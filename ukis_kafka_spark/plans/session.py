@@ -9,6 +9,17 @@ with the DuckDB oracle), Arrow for pandas interchange.
 At cluster scale the same code works unchanged: shuffle partitions and
 memory are deploy-time settings, and every operator here builds a
 declarative plan that AQE re-sizes at runtime.
+
+Python workers fork from ``plans.pydaemon`` (``spark.python.daemon.module``),
+not from ``pyspark.daemon`` directly. On CPython ≤ 3.12 PySpark's
+per-task ``importlib.invalidate_caches()`` makes every cached
+zipimporter re-read ``pyspark.zip`` or the spark-core jar, ~170 ms per
+Python task; the daemon module makes that re-read happen only when the
+archive changed. On CPython ≥ 3.13 the refresh is already lazy and the
+module only hands over to ``pyspark.daemon``. The package's parent
+directory goes into ``spark.executorEnv.PYTHONPATH`` so the daemon can
+import the module from any working directory (Spark puts its own
+entries first).
 """
 
 from __future__ import annotations
@@ -30,6 +41,7 @@ def get_spark(app_name: str = "ukis-kafka-spark", cpus: int | None = None) -> Sp
 
     if cpus is None:
         cpus = local_cpus()
+    package_parent = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -41,5 +53,7 @@ def get_spark(app_name: str = "ukis-kafka-spark", cpus: int | None = None) -> Sp
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "ukis_kafka_spark.plans.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", package_parent)
         .getOrCreate()
     )
