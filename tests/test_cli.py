@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from ukis_kafka_spark import cli
 from ukis_kafka_spark.sources.envelope import read_envelope
@@ -139,11 +140,14 @@ def test_cli_consumers_read_topic_mixing_pre_offset_files(spark, tmp_path):
 
 def test_cli_consumers_spark_job_budget(spark, tmp_path):
     """The producer writes with pyarrow and runs no Spark job, into a new
-    topic or an existing one. Each consumer decodes the topic once and
-    counts with Observations: a second decode pass, a second window in
+    topic or an existing one. Each consumer takes the topic schema from
+    the file footers and decodes the topic once, counting with
+    Observations: a schema job, a second decode pass, a second window in
     the merge, or a re-read of the output for a log line would push a
     command over its job budget (the counts measured when the budget was
-    set: 3 / 4 / 2)."""
+    set: 2 / 3 / 1). A new table's empty base has no partitions, so the
+    merge's first stage runs one task per topic read partition and no
+    zero-row base tasks."""
     gj = tmp_path / "in.geojson"
     _write_geojson(gj, n=40, keyless={3, 17})
     topic = str(tmp_path / "topic")
@@ -152,6 +156,7 @@ def test_cli_consumers_spark_job_budget(spark, tmp_path):
     produce = ["produce", "--geojson", str(gj), "--topic-dir", topic]
 
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
     jobs = {}
     try:
         for name, argv in [
@@ -164,15 +169,122 @@ def test_cli_consumers_spark_job_budget(spark, tmp_path):
             group = f"job-budget-{name}-{tmp_path.name}"
             sc.setJobGroup(group, name)
             assert cli.main(argv) == 0
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            jobs[name] = sorted(tracker.getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert jobs["produce_new_topic"] == jobs["produce_existing_topic"] == 0, jobs
-    assert jobs["upsert_new_table"] <= 3, jobs
-    assert jobs["upsert_existing_table"] <= 4, jobs
-    assert jobs["files"] <= 2, jobs
+    counts = {name: len(ids) for name, ids in jobs.items()}
+    assert counts["produce_new_topic"] == counts["produce_existing_topic"] == 0, counts
+    assert counts["upsert_new_table"] <= 2, counts
+    assert counts["upsert_existing_table"] <= 3, counts
+    assert counts["files"] <= 1, counts
+    merge_stage = min(tracker.getJobInfo(jobs["upsert_new_table"][0]).stageIds)
+    topic_partitions = cli._decoded_features(spark, topic).rdd.getNumPartitions()
+    assert tracker.getStageInfo(merge_stage).numTasks == topic_partitions
     assert spark.read.parquet(table).count() == 38
+
+
+def _consume_argv(consumer: str, topic: str, tmp_path) -> list[str]:
+    if consumer == "consume-files":
+        return [consumer, "--topic-dir", topic, "--out", str(tmp_path / "sink")]
+    return [consumer, "--topic-dir", topic, "--table", str(tmp_path / "table")]
+
+
+def test_cli_consumers_read_all_pre_offset_topic(spark, tmp_path):
+    """A topic with no offset column at all (Spark-written, so with
+    ``_SUCCESS`` and ``.crc`` files beside the data) reads ``offset``
+    as -1 for every row."""
+    import pandas as pd
+
+    from ukis_kafka_spark.sources.envelope import make_envelope
+    from ukis_kafka_spark.spatial.wkb import encode_wkb
+
+    topic = str(tmp_path / "topic")
+    old = [make_envelope(encode_wkb(("POINT", (1.0, 2.0))), {"fid": fid}, layer="pts") for fid in (7, 8)]
+    spark.createDataFrame(
+        pd.DataFrame({"value": pd.Series(old, dtype=object)}), schema="value binary"
+    ).write.parquet(topic)
+    assert cli.main(_consume_argv("consume-files", topic, tmp_path)) == 0
+    rows = spark.read.parquet(str(tmp_path / "sink")).collect()
+    assert sorted((json.loads(r["props_json"])["fid"], r["offset"]) for r in rows) == [(7, -1), (8, -1)]
+    assert cli.main(_consume_argv("consume-upsert", topic, tmp_path)) == 0
+    assert sorted(r["fid"] for r in spark.read.parquet(str(tmp_path / "table")).collect()) == ["7", "8"]
+
+
+@pytest.mark.parametrize(
+    "consumer, says", [("consume-files", "wrote 0 features"), ("consume-upsert", "now 0 rows")]
+)
+def test_cli_consumers_read_schema_only_topic(spark, tmp_path, capsys, consumer, says):
+    """An empty produce leaves only the schema-only
+    ``part-…-empty.parquet``; both consumers read it as 0 rows."""
+    import os
+
+    gj = tmp_path / "empty.geojson"
+    _write_geojson(gj, n=0)
+    topic = str(tmp_path / "topic")
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+    assert [n for n in os.listdir(topic) if not n.startswith("_")] == [f"part-{0:020d}-empty.parquet"]
+    capsys.readouterr()
+    assert cli.main(_consume_argv(consumer, topic, tmp_path)) == 0
+    assert says in capsys.readouterr().out
+
+
+@pytest.mark.parametrize("consumer", ["consume-files", "consume-upsert"])
+@pytest.mark.parametrize(
+    "topic_state, error, match",
+    [
+        ("missing", AnalysisException, "PATH_NOT_FOUND"),
+        ("value_string", ValueError, "'value' column must be binary"),
+    ],
+    ids=["missing", "value_string"],
+)
+def test_cli_consumers_reject_unreadable_topic(spark, tmp_path, consumer, topic_state, error, match):
+    """A missing topic dir fails with Spark's own PATH_NOT_FOUND; a
+    topic file whose ``value`` is not binary fails before any Spark job,
+    instead of reading as something else."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    topic = tmp_path / "topic"
+    if topic_state == "value_string":
+        topic.mkdir()
+        text = pa.table({"value": ["not an envelope"], "offset": pa.array([0], pa.int64())})
+        pq.write_table(text, topic / "part-0.parquet")
+    with pytest.raises(error, match=match):
+        cli.main(_consume_argv(consumer, str(topic), tmp_path))
+
+
+def test_cli_produce_pauses_gc_and_restores_it(tmp_path, monkeypatch):
+    """``produce`` parses the GeoJSON and encodes with the cyclic GC
+    paused, and hands the caller's GC state back: on after a produce and
+    after one that raises, still off when the caller had it off."""
+    import gc
+
+    gj, bad = tmp_path / "in.geojson", tmp_path / "bad.geojson"
+    _write_geojson(gj, n=3)
+    fc = json.loads(gj.read_text())
+    fc["features"][1]["geometry"] = {"type": "GeometryCollection", "geometries": []}
+    bad.write_text(json.dumps(fc))
+    topic = str(tmp_path / "topic")
+    load, gc_on_while_parsing = json.load, []
+    monkeypatch.setattr(json, "load", lambda fh: gc_on_while_parsing.append(gc.isenabled()) or load(fh))
+
+    gc.enable()
+    try:
+        assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+        assert gc.isenabled()
+        with pytest.raises(ValueError, match="GEOMETRYCOLLECTION"):
+            cli.main(["produce", "--geojson", str(bad), "--topic-dir", topic])
+        assert gc.isenabled()
+        gc.disable()
+        assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+        assert not gc.isenabled()
+        with pytest.raises(ValueError, match="GEOMETRYCOLLECTION"):
+            cli.main(["produce", "--geojson", str(bad), "--topic-dir", topic])
+        assert not gc.isenabled()
+    finally:
+        gc.enable()
+    assert gc_on_while_parsing == [False] * 4
 
 
 @pytest.mark.parametrize(

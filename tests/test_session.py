@@ -144,3 +144,58 @@ def test_get_spark_runs_python_udf_outside_repo(tmp_path):
         [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
+
+
+def _marked_pids(marker: str) -> set[int]:
+    """Live processes whose environment holds ``marker``."""
+    pids = set()
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/environ", "rb") as fh:
+                if marker.encode() in fh.read():
+                    pids.add(int(pid))
+        except OSError:  # exited meanwhile, or not ours to read
+            pass
+    return pids
+
+
+def test_no_process_outlives_a_stopped_session(tmp_path):
+    """The JVM, the Python worker daemon and its workers all exit with a
+    session stopped the way the benchmark stops it
+    (``perfbench/common.stop_spark``). Every process of the run inherits
+    a marker in its environment; the worker checks that it carries it,
+    and afterwards no process with the marker may remain."""
+    import time
+    import uuid
+
+    marker = f"session-leak-check-{uuid.uuid4().hex}"
+    script = textwrap.dedent(
+        f"""
+        import os, sys
+        sys.path[:0] = [{REPO!r}, {os.path.join(REPO, "perfbench")!r}]
+        from common import stop_spark
+        from ukis_kafka_spark.plans import get_spark
+
+        def marker(batches):
+            import os
+            import pandas as pd
+            for _ in batches:
+                pass
+            yield pd.DataFrame({{"m": [os.environ.get("UKIS_TEST_MARKER", "")]}})
+
+        spark = get_spark("leak-check", cpus=2)
+        rows = spark.range(10).repartition(2).mapInPandas(marker, "m string").collect()
+        assert [r.m for r in rows] == [{marker!r}] * 2, rows
+        stop_spark(spark)
+        """
+    )
+    env = dict(os.environ, UKIS_TEST_MARKER=marker, SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    deadline = time.monotonic() + 30  # the daemon may take a moment to see its JVM gone
+    while _marked_pids(marker) and time.monotonic() < deadline:
+        time.sleep(0.5)
+    left = _marked_pids(marker)
+    assert not left, [open(f"/proc/{pid}/cmdline", "rb").read()[:200] for pid in left]

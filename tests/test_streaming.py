@@ -753,3 +753,42 @@ def test_stream_reads_topic_written_by_produce(spark, tmp_path):
     rows = spark.sql("SELECT layer, props_json FROM produced_topic_stream").collect()
     assert sorted(json.loads(r["props_json"])["fid"] for r in rows) == sorted(fids)
     assert {r["layer"] for r in rows} == {"pts"}
+
+
+def test_replay_keeps_chunk_order_when_cache_mtimes_are_lost(spark):
+    """A replay cache copied without its mtimes (``cp -r``) still
+    replays chunk by chunk in the order the chunk names encode: the
+    mtimes are re-pinned when the chunks are linked into the stream dir.
+    The late-injection layout (chunk 0 named last) makes that order
+    differ from the chunk number."""
+    import shutil
+
+    from ukis_kafka_spark.streaming.jobs import _replay_chunk_cache, _scratch_dir, replay_events_as_stream
+
+    cache = _replay_chunk_cache(spark, SF_SMOKE, 3, 0)
+    names = sorted(os.listdir(cache))
+    assert names == ["chunk_001_1.parquet", "chunk_002_2.parquet", "chunk_004_0.parquet"]
+    pinned = {f: os.stat(os.path.join(cache, f)).st_mtime for f in names}
+    work = _scratch_dir()
+    try:
+        for k, f in enumerate(names):  # newest first: the reverse of the stream order
+            os.utime(os.path.join(cache, f), (2_000_000_000 - k, 2_000_000_000 - k))
+        stream = replay_events_as_stream(spark, SF_SMOKE, work, n_chunks=3, shuffle_chunk=0)
+        batches = []
+
+        def record(df, batch_id):
+            batches.append((batch_id, {os.path.basename(r["f"]) for r in df.distinct().collect()}))
+
+        q = (
+            stream.select(F.input_file_name().alias("f"))
+            .writeStream.foreachBatch(record)
+            .option("checkpointLocation", os.path.join(work, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert [files for _, files in sorted(batches)] == [{f} for f in names]
+    finally:
+        for f, m in pinned.items():
+            os.utime(os.path.join(cache, f), (m, m))
+        shutil.rmtree(work, ignore_errors=True)

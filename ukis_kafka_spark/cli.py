@@ -19,9 +19,12 @@ Shapefile or GeoPackage. Each command is only its reader: one loop,
 codec and wraps the feature in the msgpack envelope. A feature with no
 geometry is skipped and counted in one warning line. Positions are 2D:
 a position that is not two numbers (e.g. a GeoJSON altitude) raises
-``ValueError``. Producers write topic files with pyarrow under a lock
-and start no JVM. Consumers decode with the one envelope kernel,
-``sources.kafka.decode_feature_stream``, and run the R7/R8 sinks.
+``ValueError``. Producers parse and encode with the cyclic GC paused,
+write topic files with pyarrow under a lock and start no JVM.
+Consumers take the topic schema from the footers of the same visible
+files the producer counts (pyarrow, no Spark job), decode with the one
+envelope kernel, ``sources.kafka.decode_feature_stream``, and run the
+R7/R8 sinks.
 """
 
 from __future__ import annotations
@@ -37,18 +40,31 @@ def _produce(features, args: argparse.Namespace) -> int:
     ``features`` yields ``(geometry tuple or None, props, SRS id or
     None)``. A feature without geometry is skipped and counted. The
     envelope SRID is ``--srid`` if given, else the reader's SRS id,
-    else 4326 (``is None`` tests: GPKG SRS ids 0 and -1 are valid)."""
+    else 4326 (``is None`` tests: GPKG SRS ids 0 and -1 are valid).
+
+    The cyclic GC is paused while the readers parse and the loop
+    encodes: the parsed features and the envelopes hold no reference
+    cycles, so its passes over them free nothing. The caller's GC state
+    is restored on the way out, also when a reader or the codec raises."""
+    import gc
+
     from .sources.envelope import make_envelope
     from .spatial.wkb import encode_wkb
 
     envelopes, skipped = [], 0
-    for geom, props, srs_id in features:
-        if geom is None:
-            skipped += 1
-            continue
-        srid = srs_id if args.srid is None else args.srid
-        srid = 4326 if srid is None else srid
-        envelopes.append(make_envelope(encode_wkb(geom), props, layer=args.layer, srid=srid))
+    gc_was_enabled = gc.isenabled()
+    gc.disable()
+    try:
+        for geom, props, srs_id in features:
+            if geom is None:
+                skipped += 1
+                continue
+            srid = srs_id if args.srid is None else args.srid
+            srid = 4326 if srid is None else srid
+            envelopes.append(make_envelope(encode_wkb(geom), props, layer=args.layer, srid=srid))
+    finally:
+        if gc_was_enabled:
+            gc.enable()
     if skipped:
         print(f"warning: skipped {skipped} features without geometry")
     _publish_envelopes(envelopes, args.topic_dir)
@@ -58,18 +74,29 @@ def _produce(features, args: argparse.Namespace) -> int:
 def cmd_produce(args: argparse.Namespace) -> int:
     """R1+R2: GeoJSON file → feature envelopes → topic dir. A null
     geometry (RFC 7946 §3.2) is skipped; a GeometryCollection, which
-    has no ``coordinates``, is rejected by the codec."""
-    with open(args.geojson) as fh:
-        fc = json.load(fh)
-    feats = fc["features"] if fc.get("type") == "FeatureCollection" else [fc]
+    has no ``coordinates``, is rejected by the codec. The file is
+    parsed inside the reader, so in ``_produce``'s GC pause."""
 
     def read():
-        for f in feats:
+        with open(args.geojson) as fh:
+            fc = json.load(fh)
+        for f in fc["features"] if fc.get("type") == "FeatureCollection" else [fc]:
             g = f["geometry"]
             geom = None if g is None else (g["type"].upper(), g.get("coordinates"))
             yield geom, f.get("properties") or {}, None
 
     return _produce(read(), args)
+
+
+def _topic_files(topic_dir: str) -> list[str]:
+    """The topic's data files: every name that does not start with
+    ``_`` or ``.``, the rule Spark's file readers apply. So the
+    producer's offset count and the consumers' schema see the files a
+    Spark read sees, and never ``_produce.lock``, a hidden temp file,
+    ``_SUCCESS`` or a ``.crc`` checksum."""
+    import os
+
+    return [os.path.join(topic_dir, n) for n in os.listdir(topic_dir) if not n.startswith(("_", "."))]
 
 
 def _publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
@@ -97,11 +124,7 @@ def _publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
     os.makedirs(topic_dir, exist_ok=True)
     with open(os.path.join(topic_dir, "_produce.lock"), "w") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)
-        base_off = sum(
-            pq.read_metadata(os.path.join(topic_dir, name)).num_rows
-            for name in os.listdir(topic_dir)
-            if not name.startswith(("_", "."))
-        )
+        base_off = sum(pq.read_metadata(path).num_rows for path in _topic_files(topic_dir))
 
         def write(lo: int, hi: int, name: str) -> None:
             table = pa.table(
@@ -192,20 +215,34 @@ def cmd_produce_gpkg(args: argparse.Namespace) -> int:
 
 
 def _decoded_features(spark, topic_dir: str):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from .sources.kafka import decode_feature_stream
 
-    # mergeSchema: a topic dir may mix pre-offset files with
-    # offset-bearing ones (appends to an old topic); without it Spark
-    # resolves the schema from one arbitrary file's footer and could
-    # silently drop the offset column — old rows read offset NULL,
-    # which loses to any real offset under the desc last-write-wins
-    # window (nulls sort last), exactly the right semantics
-    raw = spark.read.option("mergeSchema", "true").parquet(topic_dir)
-    if "offset" not in raw.columns:  # all-pre-offset topic dirs remain readable
+    # The topic schema comes from the file footers (pyarrow, no Spark
+    # job): ``value binary``, plus ``offset long`` if any file has it. A
+    # topic dir may mix pre-offset files with offset-bearing ones
+    # (appends to an old topic); under the given schema their rows read
+    # offset NULL, which loses to any real offset under the desc
+    # last-write-wins window (nulls sort last), exactly the right
+    # semantics. A file whose ``value`` is not binary is refused here,
+    # before any job, rather than read as something else. A missing dir
+    # is left to Spark's own PATH_NOT_FOUND.
+    has_offset = False
+    for path in _topic_files(topic_dir) if os.path.isdir(topic_dir) else []:
+        schema = pq.read_schema(path)
+        value = schema.field("value").type if "value" in schema.names else None
+        if value is None or not pa.types.is_binary(value):
+            raise ValueError(f"{path}: a topic file's 'value' column must be binary, got {value}")
+        has_offset = has_offset or "offset" in schema.names
+    raw = spark.read.schema("value binary, offset long" if has_offset else "value binary").parquet(topic_dir)
+    if not has_offset:  # all-pre-offset topic dirs remain readable
         raw = raw.withColumn("offset", F.lit(-1).cast("long"))
-    return decode_feature_stream(raw.select("value", "offset"))
+    return decode_feature_stream(raw)
 
 
 def cmd_consume_files(args: argparse.Namespace) -> int:
@@ -252,7 +289,9 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     if os.path.exists(args.table):
         base = spark.read.parquet(args.table)
     else:
-        base = spark.createDataFrame([], feats.drop("offset").schema)
+        # zero partitions, so the merge runs no empty base tasks (a list
+        # would be a Python RDD with one zero-row task per core)
+        base = spark.createDataFrame(spark.sparkContext.emptyRDD(), feats.drop("offset").schema)
     # offset-order last-write-wins: re-delivered same-key messages in
     # one batch resolve to the latest produce, like the reference consumer
     n_rows = upsert_parquet(spark, base, updates, ["fid"], args.table, seq_col="offset")

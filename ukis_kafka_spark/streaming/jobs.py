@@ -50,6 +50,27 @@ from ..cache import cache_publish as _cache_publish  # noqa: E402
 from ..cache import table_fingerprint as _table_fingerprint  # noqa: E402
 
 
+def _chunk_mtime(name: str) -> int:
+    """Pinned mtime of the replay chunk ``chunk_{order:03d}_{i}.parquet``:
+    a minute per place in the stream order its name encodes."""
+    return 1_700_000_000 + int(name.split("_")[1]) * 60
+
+
+def _link_chunks(cache: str, names: list[str], into: str) -> None:
+    """Hardlink replay chunks from the cache into a private stream dir
+    (a copy across devices) and re-pin each one's mtime from its name.
+    The cache key does not cover mtimes, so a cache copied without them
+    (``cp -r``) would otherwise replay its chunks in the wrong order."""
+    os.makedirs(into, exist_ok=True)
+    for f in names:
+        dst = os.path.join(into, f)
+        try:
+            os.link(os.path.join(cache, f), dst)
+        except OSError:  # cross-device scratch: fall back to a copy
+            shutil.copy2(os.path.join(cache, f), dst)
+        os.utime(dst, (_chunk_mtime(f), _chunk_mtime(f)))
+
+
 def _replay_chunk_cache(
     spark: SparkSession, sf_dir: str, n_chunks: int, shuffle_chunk: int | None
 ) -> str:
@@ -64,7 +85,6 @@ def _replay_chunk_cache(
         chunked = e.withColumn(
             "chunk", F.floor((F.row_number().over(Window.orderBy("ts")) - 1) / per)
         )
-        base_mtime = 1_700_000_000
         # single job: one file per chunk via partitioned write, then
         # rename into stream-order names with pinned mtimes
         stage = os.path.join(into, "stage")
@@ -75,9 +95,10 @@ def _replay_chunk_cache(
             order = n_chunks + 1 if i == shuffle_chunk else i
             cdir = os.path.join(stage, f"chunk={i}")
             pf = [f for f in os.listdir(cdir) if f.endswith(".parquet")][0]
-            dst = os.path.join(into, f"chunk_{order:03d}_{i}.parquet")
+            name = f"chunk_{order:03d}_{i}.parquet"
+            dst = os.path.join(into, name)
             shutil.move(os.path.join(cdir, pf), dst)
-            os.utime(dst, (base_mtime + order * 60, base_mtime + order * 60))
+            os.utime(dst, (_chunk_mtime(name), _chunk_mtime(name)))
         shutil.rmtree(stage, ignore_errors=True)
 
     key = ("replay", 2, _table_fingerprint(sf_dir), n_chunks, shuffle_chunk)
@@ -95,19 +116,13 @@ def replay_events_as_stream(
     the watermark tests.
 
     The chunk files come from the shared build-once cache and are
-    hardlinked (mtime lives on the inode, so arrival order is
-    preserved) into ``work/src`` — each query keeps a private stream
-    directory it may mutate (the checkpoint-recovery test withholds and
-    re-delivers files) without touching the cache."""
+    hardlinked into ``work/src`` with their mtimes re-pinned from their
+    names (``_link_chunks``), so arrival order holds — each query keeps
+    a private stream directory it may mutate (the checkpoint-recovery
+    test withholds and re-delivers files) without touching the cache."""
     cache = _replay_chunk_cache(spark, sf_dir, n_chunks, shuffle_chunk)
     src = os.path.join(work, "src")
-    os.makedirs(src, exist_ok=True)
-    for f in sorted(os.listdir(cache)):
-        dst = os.path.join(src, f)
-        try:
-            os.link(os.path.join(cache, f), dst)
-        except OSError:  # cross-device scratch: fall back to a copy
-            shutil.copy2(os.path.join(cache, f), dst)
+    _link_chunks(cache, sorted(os.listdir(cache)), src)
     return (
         spark.readStream.schema(_EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -682,12 +697,7 @@ def s_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         srcs = []
         for sub, fs in (("a", files[::2]), ("b", files[1::2])):
             d = os.path.join(work, sub)
-            os.makedirs(d, exist_ok=True)
-            for f in fs:
-                try:
-                    os.link(os.path.join(cache, f), os.path.join(d, f))
-                except OSError:
-                    shutil.copy2(os.path.join(cache, f), os.path.join(d, f))
+            _link_chunks(cache, fs, d)
             srcs.append(
                 spark.readStream.schema(_EVENT_SCHEMA)
                 .option("maxFilesPerTrigger", 1)
