@@ -145,9 +145,10 @@ def test_cli_consumers_spark_job_budget(spark, tmp_path):
     Observations: a schema job, a second decode pass, a second window in
     the merge, or a re-read of the output for a log line would push a
     command over its job budget (the counts measured when the budget was
-    set: 2 / 3 / 1). A new table's empty base has no partitions, so the
-    merge's first stage runs one task per topic read partition and no
-    zero-row base tasks."""
+    set: 2 / 2 / 1). An existing table's schema comes from a footer too,
+    so its read runs no inference job. A new table's empty base has no
+    partitions, so the merge's first stage runs one task per topic read
+    partition and no zero-row base tasks."""
     gj = tmp_path / "in.geojson"
     _write_geojson(gj, n=40, keyless={3, 17})
     topic = str(tmp_path / "topic")
@@ -176,7 +177,7 @@ def test_cli_consumers_spark_job_budget(spark, tmp_path):
     counts = {name: len(ids) for name, ids in jobs.items()}
     assert counts["produce_new_topic"] == counts["produce_existing_topic"] == 0, counts
     assert counts["upsert_new_table"] <= 2, counts
-    assert counts["upsert_existing_table"] <= 3, counts
+    assert counts["upsert_existing_table"] <= 2, counts
     assert counts["files"] <= 1, counts
     merge_stage = min(tracker.getJobInfo(jobs["upsert_new_table"][0]).stageIds)
     topic_partitions = cli._decoded_features(spark, topic).rdd.getNumPartitions()
@@ -672,3 +673,38 @@ def test_fixed_width_layout_parses_back_exactly(spark):
         assert r.max_id == g["o_orderkey"].max()
         micros = (g["o_totalprice"].map(lambda v: int(round(v * 1_000_000))))
         assert r.price_micro_sum == int(micros.sum())
+
+
+def test_cli_consume_upsert_recovers_table_after_crash_between_renames(spark, tmp_path, monkeypatch):
+    """Upsert fids 0-9, then crash an upsert of fids 5-14 after the old
+    table moved to ``<table>._old`` and before the new one moved in. The
+    re-run finds no table; it must move ``._old`` back and merge into it,
+    not start a new table (which loses fids 0-4)."""
+    import os
+
+    table = str(tmp_path / "table")
+    for name, start in (("first", 0), ("second", 5)):
+        _write_geojson(tmp_path / f"{name}.geojson", n=10, start=start)
+        topic = str(tmp_path / name)
+        assert cli.main(["produce", "--geojson", str(tmp_path / f"{name}.geojson"), "--topic-dir", topic]) == 0
+    assert cli.main(["consume-upsert", "--topic-dir", str(tmp_path / "first"), "--table", table]) == 0
+
+    rename, renamed = os.rename, []
+
+    def rename_failing_second(src, dst):
+        renamed.append(src)
+        if len(renamed) == 2:
+            raise OSError("crash between the renames")
+        rename(src, dst)
+
+    second = ["consume-upsert", "--topic-dir", str(tmp_path / "second"), "--table", table]
+    monkeypatch.setattr(os, "rename", rename_failing_second)
+    with pytest.raises(OSError, match="crash between"):
+        cli.main(second)
+    monkeypatch.setattr(os, "rename", rename)
+    assert not os.path.exists(table) and os.path.exists(table + "._old")
+
+    assert cli.main(second) == 0
+    assert sorted(n for n in os.listdir(tmp_path) if n.startswith("table")) == ["table"]
+    rows = spark.read.parquet(table).collect()
+    assert sorted(int(r["fid"]) for r in rows) == list(range(15))

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from ukis_kafka_spark import api
 from ukis_kafka_spark.sources import load_table
@@ -792,3 +793,222 @@ def test_replay_keeps_chunk_order_when_cache_mtimes_are_lost(spark):
         for f, m in pinned.items():
             os.utime(os.path.join(cache, f), (m, m))
         shutil.rmtree(work, ignore_errors=True)
+
+
+def test_upsert_parquet_recovers_swap_interrupted_between_renames(spark, tmp_path, monkeypatch):
+    """A crash after ``path → path._old`` but before ``._new → path``
+    leaves no table at ``path``. ``recover_swap`` moves ``._old`` back,
+    so the re-run applies its updates to the previous table instead of
+    treating the table as new and deleting ``._old``, which would lose
+    every key the updates do not carry. ``upsert_parquet`` recovers
+    first by itself."""
+    from ukis_kafka_spark.sinks import files
+
+    path = str(tmp_path / "t")
+    schema = "k long, v string"
+    before = [(k, "a") for k in range(10)]
+    spark.createDataFrame(before, schema).write.parquet(path)
+    updates = spark.createDataFrame([(k, "b") for k in range(5, 15)], schema)
+    want = {(k, "a" if k < 5 else "b") for k in range(15)}
+    rename, renamed = os.rename, []
+
+    def rename_failing_second(src, dst):
+        renamed.append(src)
+        if len(renamed) == 2:
+            raise OSError("crash between the renames")
+        rename(src, dst)
+
+    def crash_upsert():
+        renamed.clear()
+        monkeypatch.setattr(files.os, "rename", rename_failing_second)
+        with pytest.raises(OSError, match="crash between"):
+            files.upsert_parquet(spark, spark.read.parquet(path), updates, ["k"], path)
+        monkeypatch.setattr(files.os, "rename", rename)
+        assert sorted(os.listdir(tmp_path)) == ["t._new", "t._old"]
+
+    crash_upsert()
+    files.recover_swap(path)
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()} == set(before)
+    files.upsert_parquet(spark, spark.read.parquet(path), updates, ["k"], path)
+    assert {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()} == want
+
+    spark.createDataFrame(before, schema).write.mode("overwrite").parquet(path)
+    crash_upsert()
+    monkeypatch.setattr(files.os, "rename", lambda src, dst: renamed.append(src) or rename(src, dst))
+    renamed.clear()
+    files.upsert_parquet(spark, spark.createDataFrame(before, schema), updates, ["k"], path)
+    assert renamed == [path + "._old", path, path + "._new"]
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()} == want
+
+
+def _write_feature_topic(topic: str, first: int, last: int, per_file: int = 50) -> list[dict]:
+    """Files ``first..last-1`` of a point-feature topic, one parquet file
+    per future micro-batch, with mtimes pinned in file order. File ``f``
+    holds ``per_file`` new events (80 keys, a global ``seq``, a due time
+    per file) and re-sends the first three events of file ``f - 1`` and
+    of file ``f - 2``. Returns every event written, re-sends included,
+    each with the file it went into."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ukis_kafka_spark.sources.envelope import make_envelope
+    from ukis_kafka_spark.spatial.wkb import encode_wkb
+
+    def new(f: int) -> list[dict]:
+        return [
+            {"fid": (f * per_file + i) % 80, "seq": f * per_file + i, "due_ms": 1_000_000 + 200 * f}
+            for i in range(per_file)
+        ]
+
+    os.makedirs(topic, exist_ok=True)
+    sent = []
+    for f in range(first, last):
+        events = new(f) + [e for back in (1, 2) if f >= back for e in new(f - back)[:3]]
+        vals = [make_envelope(encode_wkb(("POINT", (float(e["seq"]), 1.0))), e, layer="s") for e in events]
+        path = os.path.join(topic, f"t-{f:05d}.parquet")
+        pq.write_table(pa.table({"value": pa.array(vals, pa.binary())}), path)
+        os.utime(path, ns=((1_000 + f) * 10**9,) * 2)
+        sent += [dict(e, file=f) for e in events]
+    return sent
+
+
+def _feature_upsert_stream(spark, topic: str, table: str, ckpt: str):
+    """The stream consumer's pipeline (``perfbench/stream_consume.py``):
+    envelope file stream, one file per trigger → decode → watermark on
+    due time → ``dropDuplicates`` → ``foreachBatch(upsert_parquet)``,
+    started with ``availableNow`` on an empty table if none exists."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ukis_kafka_spark.sinks.files import upsert_parquet
+    from ukis_kafka_spark.sources.kafka import decode_feature_stream, envelope_raw_stream
+
+    if not os.path.exists(table):
+        os.makedirs(table)
+        cols = {"layer": pa.string(), "srid": pa.int32(), "geom_type": pa.string(), "wkb": pa.binary()}
+        cols |= {"props_json": pa.string(), "fid": pa.string()}
+        pq.write_table(pa.table({c: pa.array([], t) for c, t in cols.items()}), os.path.join(table, "part-0.parquet"))
+    events = (
+        decode_feature_stream(envelope_raw_stream(spark, wire_dir=topic, max_files_per_trigger=1))
+        .withColumn("fid", F.get_json_object("props_json", "$.fid"))
+        .withColumn("seq", F.get_json_object("props_json", "$.seq").cast("long"))
+        .withColumn("due_ts", F.timestamp_millis(F.get_json_object("props_json", "$.due_ms").cast("long")))
+        .withWatermark("due_ts", "30 seconds")
+        .dropDuplicates(["fid", "seq", "due_ts"])
+        .drop("due_ts")
+    )
+
+    def sink(batch, batch_id):
+        upsert_parquet(spark, spark.read.parquet(table), batch, ["fid"], table, seq_col="seq")
+
+    return events.writeStream.foreachBatch(sink).option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+
+
+def _dedup_dropped(q) -> int:
+    return sum(
+        int((so.customMetrics or {}).get("numDroppedDuplicateRows", 0)) for p in q.recentProgress for so in p.stateOperators
+    )
+
+
+def test_stream_checkpoint_writes_fork_no_readlink(spark, tmp_path):
+    """Each micro-batch renames in an offset-log, commit-log and
+    file-source-log entry and one state delta per shuffle partition.
+    Through ``get_spark``'s ``FileSystemBasedCheckpointFileManager`` no
+    rename forks a ``readlink`` shell. The ``FileContext``-based default
+    forks 984 of them over this 11-batch stream (119 forks per batch in
+    all); only ``setPermission``'s ``chmod`` forks remain, 31 per batch.
+    Forks are attributed to the batch whose trigger started last before
+    them; the first batch also writes the query's and the state stores'
+    one-time metadata, so the per-batch bound covers the others."""
+    import bisect
+    import collections
+    import datetime as dt
+
+    jvm = spark._jvm
+    try:
+        jvm.java.lang.Class.forName("jdk.jfr.Recording")
+    except Exception:
+        pytest.skip("the JVM has no jdk.jfr")
+    _write_feature_topic(str(tmp_path / "topic"), 0, 10)
+    jfr = jvm.java.io.File(str(tmp_path / "forks.jfr")).toPath()
+    rec = jvm.jdk.jfr.Recording()
+    try:
+        rec.enable("jdk.ProcessStart")
+        rec.start()
+        q = _feature_upsert_stream(spark, str(tmp_path / "topic"), str(tmp_path / "table"), str(tmp_path / "ckpt"))
+        q.awaitTermination()
+        rec.stop()
+        rec.dump(jfr)
+        forks = [
+            (e.getStartTime().toEpochMilli(), e.getString("command").split()[0])
+            for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(jfr)
+        ]
+    finally:
+        rec.close()
+        jvm.java.nio.file.Files.deleteIfExists(jfr)
+    progress = sorted(q.recentProgress, key=lambda p: p.batchId)
+    assert [p.batchId for p in progress] == list(range(11))
+    assert sum(p.numInputRows for p in progress) == 10 * 50 + 9 * 3 + 8 * 3
+    starts = [
+        dt.datetime.strptime(p.timestamp, "%Y-%m-%dT%H:%M:%S.%fZ").replace(tzinfo=dt.timezone.utc).timestamp() * 1000
+        for p in progress
+    ]
+    per_batch = collections.Counter(bisect.bisect_right(starts, t) - 1 for t, _ in forks)
+    commands = collections.Counter(cmd for _, cmd in forks)
+    assert commands["readlink"] == 0, commands
+    data_batches = [b for b, p in enumerate(progress) if p.numInputRows]
+    assert len(data_batches) == 10
+    assert max(per_batch[b] for b in data_batches[1:]) <= 32, sorted(per_batch.items())
+    assert not os.path.exists(str(tmp_path / "forks.jfr"))
+
+
+def test_checkpoint_manager_refuses_second_atomic_create(spark, tmp_path):
+    """The manager ``get_spark`` configures still refuses an atomic
+    create without overwrite on an existing checkpoint file, so a second
+    writer on the same offset log fails instead of replacing a batch."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)), conf
+    )
+    assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    entry = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    out = mgr.createAtomic(entry, False)
+    out.write(1)
+    out.close()
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        out = mgr.createAtomic(entry, False)
+        out.write(2)
+        out.close()
+    assert (tmp_path / "0").read_bytes() == b"\x01"
+
+
+def test_stateful_upsert_stream_restarts_on_its_checkpoint(spark, tmp_path):
+    """Stop the dedup + upsert stream after half the files, add the
+    rest, restart it on the same checkpoint. The table holds the latest
+    row per fid, and the dedup drops every re-send, also those of events
+    sent before the restart: the state deltas the first query wrote are
+    read back by the second."""
+    import json
+
+    topic, table, ckpt = (str(tmp_path / n) for n in ("topic", "table", "ckpt"))
+    sent = _write_feature_topic(topic, 0, 5)
+    first = _feature_upsert_stream(spark, topic, table, ckpt)
+    first.awaitTermination()
+    sent += _write_feature_topic(topic, 5, 10)
+    second = _feature_upsert_stream(spark, topic, table, ckpt)
+    second.awaitTermination()
+
+    resent = [e for e in sent if e["seq"] // 50 != e["file"]]
+    assert _dedup_dropped(first) == sum(e["file"] < 5 for e in resent) == 21
+    assert _dedup_dropped(second) == sum(e["file"] >= 5 for e in resent) == 30
+    assert min(p.batchId for p in second.recentProgress) > max(p.batchId for p in first.recentProgress)
+    latest = {}
+    for e in sorted(sent, key=lambda e: e["seq"]):
+        latest[str(e["fid"])] = json.dumps({k: e[k] for k in ("due_ms", "fid", "seq")}, sort_keys=True)
+    got = {r["fid"]: r["props_json"] for r in spark.read.parquet(table).collect()}
+    assert got == latest

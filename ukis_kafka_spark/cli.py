@@ -24,7 +24,9 @@ write topic files with pyarrow under a lock and start no JVM.
 Consumers take the topic schema from the footers of the same visible
 files the producer counts (pyarrow, no Spark job), decode with the one
 envelope kernel, ``sources.kafka.decode_feature_stream``, and run the
-R7/R8 sinks.
+R7/R8 sinks. ``consume-upsert`` reads an existing table's schema from a
+footer too, after undoing a table swap that a crash interrupted
+(``sinks.files.recover_swap``).
 """
 
 from __future__ import annotations
@@ -89,11 +91,11 @@ def cmd_produce(args: argparse.Namespace) -> int:
 
 
 def _topic_files(topic_dir: str) -> list[str]:
-    """The topic's data files: every name that does not start with
-    ``_`` or ``.``, the rule Spark's file readers apply. So the
-    producer's offset count and the consumers' schema see the files a
-    Spark read sees, and never ``_produce.lock``, a hidden temp file,
-    ``_SUCCESS`` or a ``.crc`` checksum."""
+    """A topic's (or upsert table's) data files: every name that does
+    not start with ``_`` or ``.``, the rule Spark's file readers apply.
+    So the producer's offset count and the consumers' schemas see the
+    files a Spark read sees, and never ``_produce.lock``, a hidden temp
+    file, ``_SUCCESS`` or a ``.crc`` checksum."""
     import os
 
     return [os.path.join(topic_dir, n) for n in os.listdir(topic_dir) if not n.startswith(("_", "."))]
@@ -270,11 +272,13 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     and the row count is what the merge wrote."""
     import os
 
+    import pyarrow.parquet as pq
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
 
     from .plans import get_spark
-    from .sinks.files import upsert_parquet
+    from .sinks.files import recover_swap, upsert_parquet
 
     spark = get_spark("cli-consume-upsert")
     keyless = Observation()
@@ -286,8 +290,12 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     # keyless features cannot be upserted idempotently; dropping them is
     # explicit (a NULL key would otherwise collapse them into one row)
     updates = feats.where(F.col("fid").isNotNull())
+    recover_swap(args.table)
     if os.path.exists(args.table):
-        base = spark.read.parquet(args.table)
+        # the table is this command's own output: its schema is in any
+        # data file's footer, so reading it needs no inference job
+        table_schema = from_arrow_schema(pq.read_schema(_topic_files(args.table)[0]))
+        base = spark.read.schema(table_schema).parquet(args.table)
     else:
         # zero partitions, so the merge runs no empty base tasks (a list
         # would be a Python RDD with one zero-row task per core)

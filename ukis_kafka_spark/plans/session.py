@@ -20,6 +20,23 @@ module only hands over to ``pyspark.daemon``. The package's parent
 directory goes into ``spark.executorEnv.PYTHONPATH`` so the daemon can
 import the module from any working directory (Spark puts its own
 entries first).
+
+Streaming checkpoints go through Spark's
+``FileSystemBasedCheckpointFileManager``
+(``spark.sql.streaming.checkpointFileManagerClass``), not the default
+``FileContext``-based one. Every micro-batch writes an offset-log entry,
+a commit-log entry, a file-source log entry and a state-store delta per
+shuffle partition, each renamed in from a temp file. Without
+``libhadoop``, ``FileContext.rename`` on the local file system resolves
+symlinks by forking a ``readlink`` shell per path, 88 forks per batch of
+the stream consumer; ``FileSystem.rename`` (``File.renameTo``, an atomic
+replace on POSIX) forks none. The manager keeps what matters: Spark
+still wraps the state files in its checksum manager (``.crc`` files
+and state-file checksums stay), and ``createAtomic(path,
+overwriteIfPossible=False)`` still refuses an existing file, so a
+second writer on the same offset log still fails. ``setPermission``
+still forks one ``chmod`` per written file (31 per batch); no setting
+removes those without ``libhadoop``.
 """
 
 from __future__ import annotations
@@ -55,5 +72,9 @@ def get_spark(app_name: str = "ukis-kafka-spark", cpus: int | None = None) -> Sp
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "ukis_kafka_spark.plans.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", package_parent)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        )
         .getOrCreate()
     )

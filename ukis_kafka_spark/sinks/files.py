@@ -28,6 +28,19 @@ def _scratch_dir() -> str:
     return tempfile.mkdtemp(prefix="sink_", dir=fast_scratch_root())
 
 
+def recover_swap(path: str) -> None:
+    """Undo an :func:`upsert_parquet` swap that crashed between its two
+    renames: ``path`` is missing and the previous table sits at
+    ``path + '._old'``. Moves it back and drops the new version at
+    ``path + '._new'``, so a re-run (or a stream replay of the batch)
+    re-applies the updates to the previous table instead of treating
+    the target as new. Any other state is left as it is."""
+    old = path + "._old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+        shutil.rmtree(path + "._new", ignore_errors=True)
+
+
 def upsert_parquet(
     spark: SparkSession,
     base: DataFrame,
@@ -56,7 +69,11 @@ def upsert_parquet(
     Delta log); it is crash-safe: the previous table survives at
     ``path + '._old'`` until the new one is in place, so no crash point
     loses data, and the target is absent only for the duration of one
-    directory rename (never a recursive delete)."""
+    directory rename (never a recursive delete). A crash between the
+    two renames is undone by :func:`recover_swap`, which runs first
+    here; a caller that reads ``base`` from ``path`` calls it before
+    that read."""
+    recover_swap(path)
     order, helper_cols = [F.col("_prio").asc()], ["_prio", "_rn"]
     if seq_col is not None:
         base = base.withColumn(seq_col, F.lit(None).cast(updates.schema[seq_col].dataType))
