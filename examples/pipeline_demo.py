@@ -27,7 +27,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from ukis_kafka_spark import api  # noqa: E402
 from ukis_kafka_spark.plans import get_spark  # noqa: E402
-from ukis_kafka_spark.sinks.files import upsert_parquet  # noqa: E402
+from ukis_kafka_spark.sinks.files import upsert_base, upsert_parquet  # noqa: E402
 from ukis_kafka_spark.sources import load_table  # noqa: E402
 
 
@@ -69,7 +69,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         stats_path = os.path.join(out, "doc_stats")
         stats.write.mode("overwrite").parquet(stats_path)
         upsert_parquet(
-            spark, spark.read.parquet(stats_path), stats, ["doc_id"], stats_path
+            spark, upsert_base(spark, stats_path, stats.schema), stats, ["doc_id"], stats_path
         )  # idempotent re-delivery
         n_final = spark.read.parquet(stats_path).count()
         langs = len(os.listdir(os.path.join(out, "corpus"))) - 1  # minus _SUCCESS

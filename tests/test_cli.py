@@ -268,7 +268,7 @@ def test_cli_produce_pauses_gc_and_restores_it(tmp_path, monkeypatch):
     bad.write_text(json.dumps(fc))
     topic = str(tmp_path / "topic")
     load, gc_on_while_parsing = json.load, []
-    monkeypatch.setattr(json, "load", lambda fh: gc_on_while_parsing.append(gc.isenabled()) or load(fh))
+    monkeypatch.setattr(json, "load", lambda fh, **kw: gc_on_while_parsing.append(gc.isenabled()) or load(fh, **kw))
 
     gc.enable()
     try:
@@ -312,6 +312,45 @@ def test_cli_produce_rejects_unsupported_geometry(tmp_path, geometry, match):
     with pytest.raises(ValueError, match=match):
         cli.main(["produce", "--geojson", str(gj), "--topic-dir", str(topic)])
     assert not topic.exists()
+
+
+@pytest.mark.parametrize("value, token", [(float("nan"), "NaN"), (float("-inf"), "-Infinity")])
+def test_cli_produce_rejects_nan_and_infinity(tmp_path, value, token):
+    """RFC 8259 (so GeoJSON, RFC 7946) has no ``NaN`` or ``Infinity``,
+    though Python's ``json`` reads both. ``produce`` refuses such a file
+    with ``ValueError`` and writes nothing."""
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=3)
+    fc = json.loads(gj.read_text())
+    fc["features"][1]["properties"]["h"] = value
+    gj.write_text(json.dumps(fc))
+    topic = tmp_path / "topic"
+    with pytest.raises(ValueError, match=f"{token} is not valid JSON"):
+        cli.main(["produce", "--geojson", str(gj), "--topic-dir", str(topic)])
+    assert not topic.exists()
+
+
+@pytest.mark.parametrize("consumer", ["consume-files", "consume-upsert"])
+def test_cli_consumers_refuse_nan_props(spark, tmp_path, consumer):
+    """A topic from another producer may hold a NaN float in a feature's
+    props. ``get_json_object`` reads a document holding a ``NaN`` token
+    as NULL, so ``consume-upsert`` dropped such a feature as keyless and
+    ``consume-files`` wrote non-standard JSON. The decode kernel raises
+    ``ValueError`` for it instead."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ukis_kafka_spark.sources.envelope import make_envelope
+    from ukis_kafka_spark.spatial.wkb import encode_wkb
+
+    topic = tmp_path / "topic"
+    topic.mkdir()
+    point = encode_wkb(("POINT", (1.0, 2.0)))
+    vals = [make_envelope(point, {"fid": fid, "h": h}, layer="pts") for fid, h in ((1, float("nan")), (2, 5.5))]
+    table = pa.table({"value": pa.array(vals, pa.binary()), "offset": pa.array([0, 1], pa.int64())})
+    pq.write_table(table, topic / "part-0.parquet")
+    with pytest.raises(Exception, match="ValueError: envelope props are not JSON"):
+        cli.main(_consume_argv(consumer, str(topic), tmp_path))
 
 
 def test_cli_produce_skips_null_geometry(tmp_path, capsys):

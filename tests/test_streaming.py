@@ -4,6 +4,7 @@ the semantics the DuckDB oracle cannot express."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyspark.sql.functions as F
@@ -145,6 +146,80 @@ def test_upsert_parquet_crash_safe_swap_leaves_no_debris(spark, tmp_path):
     )
     assert not os.path.exists(path + "._old") and not os.path.exists(path + "._new")
     assert {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()} == {(1, "A")}
+
+
+@pytest.mark.parametrize("state", ["new", "existing", "interrupted_swap"])
+def test_upsert_base_starts_recovers_or_reads_the_table(spark, tmp_path, state):
+    """``upsert_base`` is every caller's read of an upsert table. With no
+    table it is an empty frame of the caller's schema with zero
+    partitions. An existing table, also one whose swap crashed between
+    its two renames, is recovered first and read under its own footer's
+    schema with no Spark job, so updates of another schema fail in the
+    merge's ``unionByName`` instead of reading as NULLs."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from ukis_kafka_spark.sinks import files
+
+    path = str(tmp_path / "t")
+    rows = [(k, "a") for k in range(3)]
+    caller = StructType([StructField("k", LongType()), StructField("w", StringType())])
+    if state != "new":
+        spark.createDataFrame(rows, "k long, v string").write.parquet(path)
+    if state == "interrupted_swap":
+        spark.createDataFrame([(9, "b")], "k long, v string").write.parquet(path + "._new")
+        os.rename(path, path + "._old")
+
+    sc = spark.sparkContext
+    group = f"upsert-base-{state}-{tmp_path.name}"
+    sc.setJobGroup(group, state)
+    try:
+        base = files.upsert_base(spark, path, caller)
+        n_partitions = base.rdd.getNumPartitions()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    if state == "new":
+        assert (n_partitions, base.schema) == (0, caller)
+        assert not os.path.exists(path)
+        return
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert base.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert sorted(tuple(r) for r in base.collect()) == rows
+    with pytest.raises(AnalysisException):
+        files.upsert_parquet(spark, base, spark.createDataFrame([(1, "b")], caller), ["k"], path)
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == rows
+
+
+@pytest.mark.parametrize(
+    "props, says",
+    [
+        ({"fid": 1, "a": b"x"}, "Object of type bytes is not JSON serializable"),
+        ({1: "a", "b": 2}, "'<' not supported"),
+        ({"fid": 1, "h": float("nan")}, "not JSON compliant"),
+        ({"fid": 1, "h": float("-inf")}, "not JSON compliant"),
+    ],
+    ids=["bin_value", "mixed_key_types", "nan", "negative_infinity"],
+)
+def test_decode_feature_stream_rejects_props_that_are_not_json(spark, props, says):
+    """Props that are valid msgpack but not JSON raise the kernel's one
+    documented error, ``ValueError``: not ``TypeError`` (a bin value,
+    keys of mixed types), and no ``NaN``/``Infinity`` token, which
+    ``get_json_object`` reads as NULL, so a NaN-bearing feature read as
+    keyless. A JSON-safe envelope decodes to ``json.dumps``' bytes."""
+    from ukis_kafka_spark.sources.envelope import make_envelope
+    from ukis_kafka_spark.sources.kafka import decode_feature_stream
+    from ukis_kafka_spark.spatial.wkb import encode_wkb
+
+    def raw(*props_list):
+        envs = [(make_envelope(encode_wkb(("POINT", (1.0, 2.0))), p, layer="pts"),) for p in props_list]
+        return spark.createDataFrame(envs, "value binary")
+
+    good = {"fid": 2, "name": "ü", "h": 5.5, "tags": [1, None, True]}
+    assert [r["props_json"] for r in decode_feature_stream(raw(good)).collect()] == [json.dumps(good, sort_keys=True)]
+    with pytest.raises(Exception, match=f"ValueError: envelope props are not JSON: .*{says}"):
+        decode_feature_stream(raw(good, props)).collect()
 
 
 def test_postgis_sink_sql_generation(spark):
@@ -680,7 +755,7 @@ def test_kafka_source_online(spark):
 
     from pyspark.sql import functions as F
 
-    feats = decode_feature_stream(raw, include_geom=False)
+    feats = decode_feature_stream(raw)
     decoded = feats.select(
         F.from_json(
             "props_json", "event_id long, event_type string, value double"
@@ -925,6 +1000,8 @@ def test_stream_checkpoint_writes_fork_no_readlink(spark, tmp_path):
     import bisect
     import collections
     import datetime as dt
+    import gc
+    import time
 
     jvm = spark._jvm
     try:
@@ -932,6 +1009,12 @@ def test_stream_checkpoint_writes_fork_no_readlink(spark, tmp_path):
     except Exception:
         pytest.skip("the JVM has no jdk.jfr")
     _write_feature_topic(str(tmp_path / "topic"), 0, 10)
+    # Each session an earlier query cloned forks ``rm -rf`` of its
+    # artifact dir when the JVM collects it (Spark's ArtifactManager
+    # cleaner). Collect those now, so none lands inside the recording.
+    gc.collect()
+    jvm.java.lang.System.gc()
+    time.sleep(1)
     jfr = jvm.java.io.File(str(tmp_path / "forks.jfr")).toPath()
     rec = jvm.jdk.jfr.Recording()
     try:

@@ -24,9 +24,9 @@ write topic files with pyarrow under a lock and start no JVM.
 Consumers take the topic schema from the footers of the same visible
 files the producer counts (pyarrow, no Spark job), decode with the one
 envelope kernel, ``sources.kafka.decode_feature_stream``, and run the
-R7/R8 sinks. ``consume-upsert`` reads an existing table's schema from a
-footer too, after undoing a table swap that a crash interrupted
-(``sinks.files.recover_swap``).
+R7/R8 sinks. ``consume-upsert`` takes the table through
+``sinks.files.upsert_base``, which undoes a table swap that a crash
+interrupted and reads an existing table's schema from a footer too.
 """
 
 from __future__ import annotations
@@ -76,12 +76,17 @@ def _produce(features, args: argparse.Namespace) -> int:
 def cmd_produce(args: argparse.Namespace) -> int:
     """R1+R2: GeoJSON file → feature envelopes → topic dir. A null
     geometry (RFC 7946 §3.2) is skipped; a GeometryCollection, which
-    has no ``coordinates``, is rejected by the codec. The file is
-    parsed inside the reader, so in ``_produce``'s GC pause."""
+    has no ``coordinates``, is rejected by the codec. A ``NaN`` or
+    ``Infinity`` token, which RFC 8259 (so RFC 7946) does not allow,
+    raises ``ValueError`` and nothing is written. The file is parsed
+    inside the reader, so in ``_produce``'s GC pause."""
+
+    def reject(token: str):
+        raise ValueError(f"{args.geojson}: {token} is not valid JSON (RFC 8259)")
 
     def read():
         with open(args.geojson) as fh:
-            fc = json.load(fh)
+            fc = json.load(fh, parse_constant=reject)
         for f in fc["features"] if fc.get("type") == "FeatureCollection" else [fc]:
             g = f["geometry"]
             geom = None if g is None else (g["type"].upper(), g.get("coordinates"))
@@ -270,15 +275,11 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     """R7+R9: topic → keyed upsert (idempotent re-delivery). One decode
     pass: the keyless count is an Observation on the plan the merge runs,
     and the row count is what the merge wrote."""
-    import os
-
-    import pyarrow.parquet as pq
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import from_arrow_schema
 
     from .plans import get_spark
-    from .sinks.files import recover_swap, upsert_parquet
+    from .sinks.files import upsert_base, upsert_parquet
 
     spark = get_spark("cli-consume-upsert")
     keyless = Observation()
@@ -290,16 +291,7 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     # keyless features cannot be upserted idempotently; dropping them is
     # explicit (a NULL key would otherwise collapse them into one row)
     updates = feats.where(F.col("fid").isNotNull())
-    recover_swap(args.table)
-    if os.path.exists(args.table):
-        # the table is this command's own output: its schema is in any
-        # data file's footer, so reading it needs no inference job
-        table_schema = from_arrow_schema(pq.read_schema(_topic_files(args.table)[0]))
-        base = spark.read.schema(table_schema).parquet(args.table)
-    else:
-        # zero partitions, so the merge runs no empty base tasks (a list
-        # would be a Python RDD with one zero-row task per core)
-        base = spark.createDataFrame(spark.sparkContext.emptyRDD(), feats.drop("offset").schema)
+    base = upsert_base(spark, args.table, feats.drop("offset").schema)
     # offset-order last-write-wins: re-delivered same-key messages in
     # one batch resolve to the latest produce, like the reference consumer
     n_rows = upsert_parquet(spark, base, updates, ["fid"], args.table, seq_col="offset")

@@ -3,10 +3,11 @@ reference parity R7/R8: PostGIS upsert sink + partitioned filesystem
 sink).
 
 ``upsert_parquet`` is the offline stand-in for MERGE INTO (Delta/JDBC
-in production): last-writer-wins by key, crash-safe directory swap. The
-queries run the real sinks against repo-local scratch space and
-oracle-check what a reader sees afterwards — sink correctness is
-judged by read-back, not by write success.
+in production): last-writer-wins by key, crash-safe directory swap;
+``upsert_base`` is its table's one reader. The queries run the real
+sinks against repo-local scratch space and oracle-check what a reader
+sees afterwards — sink correctness is judged by read-back, not by
+write success.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..registry import query
 from ..sources import load_table
@@ -39,6 +41,25 @@ def recover_swap(path: str) -> None:
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
         shutil.rmtree(path + "._new", ignore_errors=True)
+
+
+def upsert_base(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """The table at ``path`` as :func:`upsert_parquet`'s ``base``, after
+    :func:`recover_swap`. An existing table reads under one visible
+    file's footer schema, not ``schema`` (no inference job; mismatched
+    updates fail in ``unionByName`` instead of reading NULLs). A new one
+    is an empty frame of ``schema`` with zero partitions, so the merge
+    runs no empty base tasks."""
+    recover_swap(path)
+    if not os.path.exists(path):
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from ..cli import _topic_files
+
+    footer = from_arrow_schema(pq.read_schema(_topic_files(path)[0]))
+    return spark.read.schema(footer).parquet(path)
 
 
 def upsert_parquet(
@@ -71,8 +92,8 @@ def upsert_parquet(
     loses data, and the target is absent only for the duration of one
     directory rename (never a recursive delete). A crash between the
     two renames is undone by :func:`recover_swap`, which runs first
-    here; a caller that reads ``base`` from ``path`` calls it before
-    that read."""
+    here; a caller that reads ``base`` from ``path`` calls
+    :func:`upsert_base`, which recovers before it reads."""
     recover_swap(path)
     order, helper_cols = [F.col("_prio").asc()], ["_prio", "_rn"]
     if seq_col is not None:
@@ -173,7 +194,7 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.write.mode("overwrite").parquet(target)
         upsert_parquet(
             spark,
-            spark.read.parquet(target),
+            upsert_base(spark, target, c.schema),
             updates_existing.unionByName(updates_new),
             ["c_custkey"],
             target,

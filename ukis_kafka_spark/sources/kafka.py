@@ -70,40 +70,39 @@ def envelope_raw_stream(
     )
 
 
-def decode_feature_stream(raw: DataFrame, include_geom: bool = True) -> DataFrame:
+def decode_feature_stream(raw: DataFrame) -> DataFrame:
     """msgpack feature envelopes (``value binary``) → decoded feature
     rows (layer, srid, geom_type, wkb, props_json), followed by every
     other column of ``raw`` (e.g. the topic ``offset``) unchanged.
     Shared by the Kafka and file-twin sources — the decode is
-    source-agnostic. A malformed envelope or WKB raises ``ValueError``.
-
-    ``include_geom=False`` prunes the wkb payload INSIDE the kernel for
-    consumers that only read properties (the geometry is still decoded
-    as an integrity check, it just never crosses the Arrow boundary).
-    At this corpus's ~21-byte point WKBs the saving is noise — the
-    per-row msgpack decode dominates — but payload-heavy geometries
-    (polygons, multipart) are exactly what a property-only consumer
-    should not ship."""
+    source-agnostic. A malformed envelope or WKB raises ``ValueError``,
+    and so do props that are not JSON: a bin value, keys of mixed
+    types, or a NaN/Infinity float (Spark's ``get_json_object`` reads a
+    document holding such a token as NULL)."""
     from pyspark.sql.types import BinaryType, IntegerType, StringType, StructField, StructType
 
     from .envelope import read_envelope
     from ..spatial.wkb import decode_wkb
 
-    cols = ["layer", "srid", "geom_type"] + (["wkb"] if include_geom else []) + ["props_json"]
+    cols = ["layer", "srid", "geom_type", "wkb", "props_json"]
     passthrough = [f for f in raw.schema.fields if f.name != "value"]
 
     def decode(iter_pdf):
+        to_json = json.JSONEncoder(sort_keys=True, allow_nan=False).encode
         for pdf in iter_pdf:
             out = {c: [] for c in cols}
             for buf in pdf["value"]:
                 env = read_envelope(bytes(buf))
                 gtype, _ = decode_wkb(env["geom"])
+                try:
+                    props_json = to_json(env["props"])
+                except (TypeError, ValueError) as exc:
+                    raise ValueError(f"envelope props are not JSON: {exc}") from None
                 out["layer"].append(env["meta"]["layer"])
                 out["srid"].append(env["meta"].get("srid", 4326))
                 out["geom_type"].append(gtype)
-                if include_geom:
-                    out["wkb"].append(env["geom"])
-                out["props_json"].append(json.dumps(env["props"], sort_keys=True))
+                out["wkb"].append(env["geom"])
+                out["props_json"].append(props_json)
             for f in passthrough:
                 out[f.name] = pdf[f.name].to_numpy()
             yield pd.DataFrame(out)
@@ -111,4 +110,3 @@ def decode_feature_stream(raw: DataFrame, include_geom: bool = True) -> DataFram
     types = {"srid": IntegerType(), "wkb": BinaryType()}
     schema = StructType([StructField(c, types.get(c, StringType())) for c in cols] + passthrough)
     return raw.mapInPandas(decode, schema)
-

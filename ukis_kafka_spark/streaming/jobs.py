@@ -430,9 +430,9 @@ def src_kafka_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cache_publish(build_wire, ("wire", 2, _table_fingerprint(sf_dir))), "wire"
         )
         stream = envelope_raw_stream(spark, wire_dir=src)
-        feats = decode_feature_stream(stream, include_geom=False)
+        feats = decode_feature_stream(stream)
         # event fields ride in props_json; extraction is JVM-side
-        # (from_json round-trips json.dumps exactly for long/str/double)
+        # (from_json round-trips the kernel's JSON exactly for long/str/double)
         decoded = feats.select(
             F.from_json(
                 "props_json", "event_id long, event_type string, value double"
@@ -561,6 +561,16 @@ def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _with_scratch(go)
 
 
+def _upsert_latest_event(spark: SparkSession, updates: DataFrame, target: str) -> None:
+    """Merge into ``target``, the highest ``last_event_id`` per user
+    winning (on a copy: the sink drops its ``seq_col``)."""
+    from ..sinks.files import upsert_base, upsert_parquet
+
+    base = upsert_base(spark, target, updates.schema)
+    seq = updates.withColumn("_seq", F.col("last_event_id"))
+    upsert_parquet(spark, base, seq, ["user_id"], target, seq_col="_seq")
+
+
 @query(
     "s_foreach_upsert",
     oracle="""
@@ -575,12 +585,11 @@ FROM (
 def s_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming → keyed upsert sink via foreachBatch — the reference's
     R7/R9 consume-upsert loop as a Structured Streaming job: each
-    micro-batch reduces to its per-user latest event (event_id is
-    verified ts-monotone) and MERGEs into the target; re-delivered keys
-    resolve last-write-wins, so after in-order replay the table equals
-    the batch per-user-latest. Exercises the real sink path the
-    PostGIS/Delta writer uses, end to end, with an exact oracle."""
-    from ..sinks.files import upsert_parquet
+    micro-batch MERGEs into the target, ranked by event_id (verified
+    ts-monotone); re-delivered keys resolve last-write-wins, so after
+    in-order replay the table equals the batch per-user-latest.
+    Exercises the real sink path the PostGIS/Delta writer uses, end to
+    end, with an exact oracle."""
 
     def go(work: str) -> DataFrame:
         stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
@@ -592,25 +601,11 @@ def s_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").alias("last_value"),
         )
 
-        def handle(batch_df, batch_id):
-            w = Window.partitionBy("user_id").orderBy(F.col("last_event_id").desc())
-            latest = (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            if os.path.exists(target):
-                upsert_parquet(
-                    spark, spark.read.parquet(target), latest, ["user_id"], target
-                )
-            else:
-                latest.write.parquet(target)
-
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
             q = (
-                sel.writeStream.foreachBatch(handle)
+                sel.writeStream.foreachBatch(lambda batch, _: _upsert_latest_event(spark, batch, target))
                 .option("checkpointLocation", os.path.join(work, "ckpt_upsert"))
                 .trigger(availableNow=True)
                 .start()
@@ -1757,7 +1752,6 @@ def s_warm_start_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch job; the streaming continuation is s_foreach_upsert's merge
     loop unchanged — the handoff costs nothing but the split
     bookkeeping."""
-    from ..sinks.files import upsert_parquet
 
     def go(work: str) -> DataFrame:
         target = os.path.join(work, "warm_target")
@@ -1776,34 +1770,18 @@ def s_warm_start_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100).cast("long").alias("last_value_centi"),
         ]
         hist = e.join(F.broadcast(hist_ids), "event_id").select(*sel_cols)
-        w = Window.partitionBy("user_id").orderBy(F.col("last_event_id").desc())
-        primed = (
-            hist.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        primed.write.mode("overwrite").parquet(target)
+        _upsert_latest_event(spark, hist, target)
 
         stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
         live = stream.join(
             F.broadcast(hist_ids), "event_id", "left_anti"
         ).select(*sel_cols)
 
-        def handle(batch_df, batch_id):
-            latest = (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            upsert_parquet(
-                spark, spark.read.parquet(target), latest, ["user_id"], target
-            )
-
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
             q = (
-                live.writeStream.foreachBatch(handle)
+                live.writeStream.foreachBatch(lambda batch, _: _upsert_latest_event(spark, batch, target))
                 .option("checkpointLocation", os.path.join(work, "ckpt_warm"))
                 .trigger(availableNow=True)
                 .start()
