@@ -414,6 +414,39 @@ def test_cli_concurrent_producers_get_disjoint_offsets(spark, tmp_path):
     assert sorted(bytes(r["value"]) for r in rows) == sorted(want)
 
 
+def test_cli_producers_import_no_pyspark(tmp_path):
+    """Two ``produce`` calls into one topic, in a fresh process, import
+    no ``pyspark`` module (``sources.kafka`` keeps its Spark imports
+    inside the readers) and number the features ``0..n-1``."""
+    import os
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([repo, os.environ.get("PYTHONPATH", "")]))
+    code = (
+        "import sys\n"
+        "from ukis_kafka_spark import cli\n"
+        "topic = sys.argv[1]\n"
+        "for gj in sys.argv[2:]:\n"
+        "    assert cli.main(['produce', '--geojson', gj, '--topic-dir', topic]) == 0\n"
+        "loaded = sorted(m for m in sys.modules if m.split('.')[0] == 'pyspark')\n"
+        "assert not loaded, loaded\n"
+    )
+    topic = str(tmp_path / "topic")
+    inputs = []
+    for p, (n, start) in enumerate([(7, 0), (5, 7)]):
+        gj = tmp_path / f"in{p}.geojson"
+        _write_geojson(gj, n=n, start=start)
+        inputs.append(str(gj))
+    r = subprocess.run([sys.executable, "-c", code, topic, *inputs], env=env, capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stderr[-500:]
+
+    assert sorted(pq.read_table(topic).column("offset").to_pylist()) == list(range(12))
+
+
 def test_pipeline_demo_runs(spark):
     import subprocess
     import sys

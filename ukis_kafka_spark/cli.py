@@ -1,11 +1,8 @@
 """Console entry points — reference parity for ukis_kafka's three
 CLIs (SURVEY.md §3.1: producer vector-file→Kafka, consumer
-Kafka→PostGIS, consumer Kafka→filesystem), re-based on Spark.
-
-Offline, a "topic" is a directory of parquet files holding the binary
-``value`` column (the exact Kafka message shape) and its ``offset``;
-with a broker, swap the directory for ``format("kafka")`` via
-sources.kafka.
+Kafka→PostGIS, consumer Kafka→filesystem), re-based on Spark. Offline,
+a topic is a directory; ``sources.kafka`` owns its layout, writer and
+readers.
 
     python -m ukis_kafka_spark.cli produce  --geojson in.geojson --topic-dir /x/topic --layer roads
     python -m ukis_kafka_spark.cli produce-wkt --csv in.csv --wkt-col WKT --topic-dir /x/topic --layer roads
@@ -19,14 +16,10 @@ Shapefile or GeoPackage. Each command is only its reader: one loop,
 codec and wraps the feature in the msgpack envelope. A feature with no
 geometry is skipped and counted in one warning line. Positions are 2D:
 a position that is not two numbers (e.g. a GeoJSON altitude) raises
-``ValueError``. Producers parse and encode with the cyclic GC paused,
-write topic files with pyarrow under a lock and start no JVM.
-Consumers take the topic schema from the footers of the same visible
-files the producer counts (pyarrow, no Spark job), decode with the one
-envelope kernel, ``sources.kafka.decode_feature_stream``, and run the
-R7/R8 sinks. ``consume-upsert`` takes the table through
-``sinks.files.upsert_base``, which undoes a table swap that a crash
-interrupted and reads an existing table's schema from a footer too.
+``ValueError``. Producers parse and encode with the cyclic GC paused
+and start no JVM. Consumers read the topic with
+``sources.kafka.read_topic`` and run the R7/R8 sinks.
+``consume-upsert`` takes the table through ``sinks.files.upsert_base``.
 """
 
 from __future__ import annotations
@@ -34,6 +27,10 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+
+# bound here so the commands call them as globals of this module, which
+# is where perfbench's tracer wraps them
+from .sources.kafka import publish_envelopes as _publish_envelopes, read_topic as _decoded_features
 
 
 def _produce(features, args: argparse.Namespace) -> int:
@@ -70,6 +67,7 @@ def _produce(features, args: argparse.Namespace) -> int:
     if skipped:
         print(f"warning: skipped {skipped} features without geometry")
     _publish_envelopes(envelopes, args.topic_dir)
+    print(f"produced {len(envelopes)} features to {args.topic_dir}")
     return 0
 
 
@@ -93,64 +91,6 @@ def cmd_produce(args: argparse.Namespace) -> int:
             yield geom, f.get("properties") or {}, None
 
     return _produce(read(), args)
-
-
-def _topic_files(topic_dir: str) -> list[str]:
-    """A topic's (or upsert table's) data files: every name that does
-    not start with ``_`` or ``.``, the rule Spark's file readers apply.
-    So the producer's offset count and the consumers' schemas see the
-    files a Spark read sees, and never ``_produce.lock``, a hidden temp
-    file, ``_SUCCESS`` or a ``.crc`` checksum."""
-    import os
-
-    return [os.path.join(topic_dir, n) for n in os.listdir(topic_dir) if not n.startswith(("_", "."))]
-
-
-def _publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
-    """Append envelopes to the topic dir with monotonic per-message
-    offsets (Kafka-offset parity): continue from the existing topic
-    size so re-delivered keys keep produce order.
-
-    Written with pyarrow under an exclusive lock on ``_produce.lock``;
-    no JVM starts. The next offset is the row count in the footers of
-    the topic's visible files, so concurrent producers get disjoint,
-    gap-free offsets. The envelopes land as ``value binary, offset
-    long`` in contiguous slices, one per local core (the read
-    parallelism of a consumer), each named by its first offset and
-    renamed in from a hidden temp name: Spark's readers skip names
-    starting with ``_`` or ``.``, so they never see the lock or a
-    half-written file."""
-    import fcntl
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .plans.session import local_cpus
-
-    os.makedirs(topic_dir, exist_ok=True)
-    with open(os.path.join(topic_dir, "_produce.lock"), "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        base_off = sum(pq.read_metadata(path).num_rows for path in _topic_files(topic_dir))
-
-        def write(lo: int, hi: int, name: str) -> None:
-            table = pa.table(
-                {
-                    "value": pa.array(envelopes[lo:hi], pa.binary()),
-                    "offset": pa.array(range(base_off + lo, base_off + hi), pa.int64()),
-                }
-            )
-            tmp = os.path.join(topic_dir, f".{name}.tmp")
-            pq.write_table(table, tmp)
-            os.rename(tmp, os.path.join(topic_dir, name))
-
-        n, k = len(envelopes), local_cpus()
-        cuts = sorted({i * n // k for i in range(k + 1)})
-        for lo, hi in zip(cuts, cuts[1:]):
-            write(lo, hi, f"part-{base_off + lo:020d}.parquet")
-        if not n:  # schema only, as a Spark append writes: keeps a new topic readable
-            write(0, 0, f"part-{base_off:020d}-empty.parquet")
-    print(f"produced {len(envelopes)} features to {topic_dir}")
 
 
 def _coerce_prop(v):
@@ -219,37 +159,6 @@ def cmd_produce_gpkg(args: argparse.Namespace) -> int:
     from .sources.gpkg import read_gpkg
 
     return _produce(read_gpkg(args.gpkg, layer=args.gpkg_layer), args)
-
-
-def _decoded_features(spark, topic_dir: str):
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from .sources.kafka import decode_feature_stream
-
-    # The topic schema comes from the file footers (pyarrow, no Spark
-    # job): ``value binary``, plus ``offset long`` if any file has it. A
-    # topic dir may mix pre-offset files with offset-bearing ones
-    # (appends to an old topic); under the given schema their rows read
-    # offset NULL, which loses to any real offset under the desc
-    # last-write-wins window (nulls sort last), exactly the right
-    # semantics. A file whose ``value`` is not binary is refused here,
-    # before any job, rather than read as something else. A missing dir
-    # is left to Spark's own PATH_NOT_FOUND.
-    has_offset = False
-    for path in _topic_files(topic_dir) if os.path.isdir(topic_dir) else []:
-        schema = pq.read_schema(path)
-        value = schema.field("value").type if "value" in schema.names else None
-        if value is None or not pa.types.is_binary(value):
-            raise ValueError(f"{path}: a topic file's 'value' column must be binary, got {value}")
-        has_offset = has_offset or "offset" in schema.names
-    raw = spark.read.schema("value binary, offset long" if has_offset else "value binary").parquet(topic_dir)
-    if not has_offset:  # all-pre-offset topic dirs remain readable
-        raw = raw.withColumn("offset", F.lit(-1).cast("long"))
-    return decode_feature_stream(raw)
 
 
 def cmd_consume_files(args: argparse.Namespace) -> int:

@@ -56,9 +56,9 @@ def upsert_base(spark: SparkSession, path: str, schema: StructType) -> DataFrame
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    from ..cli import _topic_files
+    from ..sources.kafka import data_files
 
-    footer = from_arrow_schema(pq.read_schema(_topic_files(path)[0]))
+    footer = from_arrow_schema(pq.read_schema(data_files(path)[0]))
     return spark.read.schema(footer).parquet(path)
 
 

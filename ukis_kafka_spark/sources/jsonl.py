@@ -859,8 +859,8 @@ def src_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    from ..cli import _decoded_features
     from ..spatial.wkb import decode_wkb
+    from .kafka import publish_envelopes, read_topic
 
     def build(into: str) -> None:
         from ..sources.envelope import make_envelope
@@ -889,18 +889,10 @@ def src_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             make_envelope(encode_wkb(geom), props, layer="suppliers", srid=srid)
             for geom, props, srid in read_gpkg(gpkg_path)
         ]
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "value": pd.Series(envelopes, dtype=object),
-                    "offset": range(len(envelopes)),
-                }
-            ),
-            schema="value binary, offset long",
-        ).write.mode("overwrite").parquet(os.path.join(into, "topic"))
+        publish_envelopes(envelopes, os.path.join(into, "topic"))
 
     src = os.path.join(
-        _cache_publish(build, ("gpkg", 1, _table_fingerprint(sf_dir, "supplier"))),
+        _cache_publish(build, ("gpkg", 2, _table_fingerprint(sf_dir, "supplier"))),
         "topic",
     )
 
@@ -908,7 +900,7 @@ def src_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     def wkb_lon(b):
         return pd.Series([decode_wkb(bytes(v))[1][0] for v in b])
 
-    feats = _decoded_features(spark, src)
+    feats = read_topic(spark, src)
     return (
         feats.select(
             F.get_json_object("props_json", "$.s_nationkey").cast("int").alias("nationkey"),

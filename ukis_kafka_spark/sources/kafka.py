@@ -1,32 +1,120 @@
-"""Kafka source wiring (reference parity R2/R3 online path).
+"""The topic: its layout, its writer and its readers (reference parity
+R2/R3).
 
-No broker (and no spark-sql-kafka connector jar) exists in the offline
-harness, so the source is exercised there through its file-based twin.
-Producing needs no code here: the CLI producers write the topic
-directory's parquet files, and online a broker takes the same envelope
-bytes from Spark's own Kafka sink (``write.format("kafka")``) or any
-Kafka producer client. The selectable entry point is
-``envelope_raw_stream``: set ``UKIS_KAFKA_BROKERS`` (or pass
-``brokers=``) and the SAME pipeline reads ``format("kafka")``; leave it
-unset and it reads the wire-format parquet twin. Everything downstream of the raw ``value binary`` column
-— ``decode_feature_stream``, the aggregates, the sinks — is one shared
-code path, byte-for-byte identical in both modes
-(streaming.jobs.src_kafka_shape drives it through the oracle gate
-offline). ``decode_feature_stream`` is the only envelope decoder: the
-batch CLI consumers (``cli._decoded_features``) call it too.
+Offline, a topic is a directory of parquet files ``value binary, offset
+long``: ``value`` is the exact Kafka message (a msgpack feature
+envelope) and ``offset`` its monotonic position. This module is the one
+place that knows that layout. ``data_files`` lists the visible files,
+``publish_envelopes`` appends with pyarrow (no JVM), ``read_topic`` reads
+the directory as a batch and ``envelope_raw_stream`` as a stream. The
+CLI commands, the upsert sink and the oracle queries go through these.
+
+No broker (and no spark-sql-kafka connector jar) exists offline, so the
+stream is exercised there through its file-based twin. Set
+``UKIS_KAFKA_BROKERS`` (or pass ``brokers=``) and the SAME pipeline
+reads ``format("kafka")``; online a broker takes the same envelope bytes
+from Spark's Kafka sink or any Kafka producer client. Everything
+downstream of the raw ``value`` column is one shared code path, byte for
+byte identical in both modes (streaming.jobs.src_kafka_shape drives it
+through the oracle gate offline). ``decode_feature_stream`` is the only
+envelope decoder.
+
+``pandas`` and ``pyspark`` are imported inside the functions that use
+them, so a producer imports this module without either.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from typing import TYPE_CHECKING
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 ENV_BROKERS = "UKIS_KAFKA_BROKERS"
 ENV_TOPIC = "UKIS_KAFKA_TOPIC"
+
+
+def data_files(topic_dir: str) -> list[str]:
+    """A topic's (or upsert table's) data files: every name that does
+    not start with ``_`` or ``.``, the rule Spark's file readers apply.
+    So the producer's offset count and the consumers' schemas see the
+    files a Spark read sees, and never ``_produce.lock``, a hidden temp
+    file, ``_SUCCESS`` or a ``.crc`` checksum."""
+    return [os.path.join(topic_dir, n) for n in os.listdir(topic_dir) if not n.startswith(("_", "."))]
+
+
+def publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
+    """Append envelopes to the topic dir with monotonic per-message
+    offsets (Kafka-offset parity): continue from the existing topic
+    size so re-delivered keys keep produce order.
+
+    Written with pyarrow under an exclusive lock on ``_produce.lock``;
+    no JVM starts. The next offset is the row count in the footers of
+    :func:`data_files`, so concurrent producers get disjoint, gap-free
+    offsets. The envelopes land in contiguous slices, one per local core
+    (the read parallelism of a consumer), each named by its first offset
+    and renamed in from a hidden temp name, which no reader sees."""
+    import fcntl
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ..plans.session import local_cpus
+
+    os.makedirs(topic_dir, exist_ok=True)
+    with open(os.path.join(topic_dir, "_produce.lock"), "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        base_off = sum(pq.read_metadata(path).num_rows for path in data_files(topic_dir))
+
+        def write(lo: int, hi: int, name: str) -> None:
+            table = pa.table(
+                {
+                    "value": pa.array(envelopes[lo:hi], pa.binary()),
+                    "offset": pa.array(range(base_off + lo, base_off + hi), pa.int64()),
+                }
+            )
+            tmp = os.path.join(topic_dir, f".{name}.tmp")
+            pq.write_table(table, tmp)
+            os.rename(tmp, os.path.join(topic_dir, name))
+
+        n, k = len(envelopes), local_cpus()
+        cuts = sorted({i * n // k for i in range(k + 1)})
+        for lo, hi in zip(cuts, cuts[1:]):
+            write(lo, hi, f"part-{base_off + lo:020d}.parquet")
+        if not n:  # schema only, as a Spark append writes: keeps a new topic readable
+            write(0, 0, f"part-{base_off:020d}-empty.parquet")
+
+
+def read_topic(spark: SparkSession, topic_dir: str) -> DataFrame:
+    """The topic as decoded feature rows plus its ``offset``
+    (:func:`decode_feature_stream` over a batch read).
+
+    The schema comes from the file footers (pyarrow, no Spark job):
+    ``value binary``, plus ``offset long`` if any file has it. A topic
+    dir may mix pre-offset files with offset-bearing ones (appends to an
+    old topic); under the given schema their rows read offset NULL,
+    which loses to any real offset under the desc last-write-wins window
+    (nulls sort last), exactly the right semantics. A file whose
+    ``value`` is not binary is refused here, before any job, rather than
+    read as something else. A missing dir is left to Spark's own
+    PATH_NOT_FOUND."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    has_offset = False
+    for path in data_files(topic_dir) if os.path.isdir(topic_dir) else []:
+        schema = pq.read_schema(path)
+        value = schema.field("value").type if "value" in schema.names else None
+        if value is None or not pa.types.is_binary(value):
+            raise ValueError(f"{path}: a topic file's 'value' column must be binary, got {value}")
+        has_offset = has_offset or "offset" in schema.names
+    raw = spark.read.schema("value binary, offset long" if has_offset else "value binary").parquet(topic_dir)
+    if not has_offset:  # all-pre-offset topic dirs remain readable
+        raw = raw.withColumn("offset", F.lit(-1).cast("long"))
+    return decode_feature_stream(raw)
 
 
 def envelope_raw_stream(
@@ -35,7 +123,6 @@ def envelope_raw_stream(
     brokers: str | None = None,
     topic: str | None = None,
     wire_dir: str | None = None,
-    starting_offsets: str = "earliest",
     max_files_per_trigger: int = 4,
 ) -> DataFrame:
     """The ONE source switch for envelope pipelines: returns a streaming
@@ -55,7 +142,7 @@ def envelope_raw_stream(
             spark.readStream.format("kafka")
             .option("kafka.bootstrap.servers", brokers)
             .option("subscribe", topic)
-            .option("startingOffsets", starting_offsets)
+            .option("startingOffsets", "earliest")
             .load()
             .select("value")
         )
@@ -79,6 +166,7 @@ def decode_feature_stream(raw: DataFrame) -> DataFrame:
     and so do props that are not JSON: a bin value, keys of mixed
     types, or a NaN/Infinity float (Spark's ``get_json_object`` reads a
     document holding such a token as NULL)."""
+    import pandas as pd
     from pyspark.sql.types import BinaryType, IntegerType, StringType, StructField, StructType
 
     from .envelope import read_envelope

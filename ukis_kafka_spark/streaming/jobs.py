@@ -397,6 +397,9 @@ def src_kafka_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.kafka import decode_feature_stream, envelope_raw_stream
     from ..spatial.wkb import encode_wkb
 
+    # Not sources.kafka.publish_envelopes: the wire is value-only files,
+    # the shape a Kafka->parquet archiver writes, and the per-row encode
+    # runs distributed in mapInPandas (built once, cached).
     def build_wire(into: str) -> None:
         e = load_table(spark, sf_dir, "events")
 
@@ -601,18 +604,13 @@ def s_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").alias("last_value"),
         )
 
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                sel.writeStream.foreachBatch(lambda batch, _: _upsert_latest_event(spark, batch, target))
-                .option("checkpointLocation", os.path.join(work, "ckpt_upsert"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q = (
+            sel.writeStream.foreachBatch(lambda batch, _: _upsert_latest_event(spark, batch, target))
+            .option("checkpointLocation", os.path.join(work, "ckpt_upsert"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         return spark.read.parquet(target).localCheckpoint()
 
     return _with_scratch(go)
@@ -1704,7 +1702,7 @@ def s_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def audit(path: str, route: str) -> DataFrame:
             return (
-                spark.read.parquet(os.path.join(path, "batch=*"))
+                spark.read.parquet(path)
                 .groupBy("event_type")
                 .agg(
                     F.count(F.lit(1)).alias("n"),
@@ -1777,18 +1775,13 @@ def s_warm_start_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(hist_ids), "event_id", "left_anti"
         ).select(*sel_cols)
 
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                live.writeStream.foreachBatch(lambda batch, _: _upsert_latest_event(spark, batch, target))
-                .option("checkpointLocation", os.path.join(work, "ckpt_warm"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        q = (
+            live.writeStream.foreachBatch(lambda batch, _: _upsert_latest_event(spark, batch, target))
+            .option("checkpointLocation", os.path.join(work, "ckpt_warm"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         return spark.read.parquet(target).localCheckpoint()
 
     return _with_scratch(go)
