@@ -1,15 +1,21 @@
-"""The Python worker daemon of ``plans.session.get_spark``.
+"""The Python worker daemon and the JVM ↔ Python sockets of
+``plans.session.get_spark``.
 
 ``plans.pydaemon`` makes a zipimporter skip the per-task re-read of an
 unchanged archive (CPython ≤ 3.12). These tests pin the saving inside
 a real worker, the correctness of the skip on a zip that changes, the
 CPython 3.13 guard, and that the daemon starts from any working
-directory.
+directory. The workers reach the JVM over Unix domain sockets in a
+private directory per process: the tests pin the socket family inside
+a worker, a deep ``java.io.tmpdir``, and that no socket file or
+directory outlives the process.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import stat
 import subprocess
 import sys
 import textwrap
@@ -57,6 +63,38 @@ def test_python_worker_skips_unchanged_archive_rereads(spark):
     rows = spark.range(40).repartition(4).mapInPandas(count_reads, "reads long").collect()
     assert len(rows) == 4
     assert [r.reads for r in rows] == [0, 0, 0, 0]
+
+
+def test_python_worker_reaches_the_jvm_over_unix_sockets(spark):
+    """Every socket a worker holds is ``AF_UNIX`` (``AF_INET`` over
+    loopback TCP without the setting), in the session's socket
+    directory, which only its owner may enter."""
+
+    def sockets(batches):
+        import os
+        import socket
+
+        import pandas as pd
+
+        families = []
+        for fd in os.listdir("/proc/self/fd"):
+            try:
+                if not os.readlink(f"/proc/self/fd/{fd}").startswith("socket:"):
+                    continue
+                with socket.socket(fileno=os.dup(int(fd))) as sock:
+                    families.append(sock.family.name)
+            except OSError:  # the listing's own fd, closed meanwhile
+                pass
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {"families": [",".join(sorted(set(families)))], "dir": [os.environ.get("PYTHON_WORKER_FACTORY_SOCK_DIR")]}
+        )
+
+    sock_dir = spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir")
+    rows = spark.range(4).repartition(2).mapInPandas(sockets, "families string, dir string").collect()
+    assert [(r.families, r.dir) for r in rows] == [("AF_UNIX", sock_dir)] * 2
+    assert stat.S_IMODE(os.stat(sock_dir).st_mode) == 0o700
 
 
 def _write_zip(path, module: str, padding: int = 0) -> None:
@@ -125,7 +163,10 @@ def test_install_leaves_lazy_zipimport_untouched(monkeypatch):
 
 def test_get_spark_runs_python_udf_outside_repo(tmp_path):
     """The daemon module is importable when neither the cwd nor
-    ``PYTHONPATH`` leads to the repo: else every Python UDF fails."""
+    ``PYTHONPATH`` leads to the repo: else every Python UDF fails. Also
+    with a ``java.io.tmpdir`` of ≥ 90 characters (the benchmark points
+    it into the checkout) the sockets bind: Spark's default socket path
+    there is too long for ``AF_UNIX``."""
     script = textwrap.dedent(
         f"""
         import sys
@@ -140,10 +181,18 @@ def test_get_spark_runs_python_udf_outside_repo(tmp_path):
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_DRIVER_MEMORY"] = "1g"
-    proc = subprocess.run(
-        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
+    deep = tmp_path / ("d" * 90)
+    deep.mkdir()
+    for java_options in ({}, {"JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={deep}"}):
+        proc = subprocess.run(
+            [sys.executable, "-c", script],
+            cwd=tmp_path,
+            env=dict(env, **java_options),
+            capture_output=True,
+            text=True,
+            timeout=300,
+        )
+        assert proc.returncode == 0, (java_options, proc.stderr[-4000:])
 
 
 def _marked_pids(marker: str) -> set[int]:
@@ -184,6 +233,7 @@ def test_no_process_outlives_a_stopped_session(tmp_path):
             yield pd.DataFrame({{"m": [os.environ.get("UKIS_TEST_MARKER", "")]}})
 
         spark = get_spark("leak-check", cpus=2)
+        print(spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir"))
         rows = spark.range(10).repartition(2).mapInPandas(marker, "m string").collect()
         assert [r.m for r in rows] == [{marker!r}] * 2, rows
         stop_spark(spark)
@@ -199,3 +249,35 @@ def test_no_process_outlives_a_stopped_session(tmp_path):
         time.sleep(0.5)
     left = _marked_pids(marker)
     assert not left, [open(f"/proc/{pid}/cmdline", "rb").read()[:200] for pid in left]
+    sock_dir = proc.stdout.split()[-1]
+    assert sock_dir.startswith("/tmp/spark-uds-") and not os.path.exists(sock_dir)
+
+
+def _uds_leftovers() -> set[str]:
+    """Socket directories of ``get_spark`` and Spark's own default
+    socket files in ``/tmp``."""
+    return set(glob.glob("/tmp/spark-uds-*")) | set(glob.glob("/tmp/.*.sock"))
+
+
+def test_unstopped_session_leaves_no_socket_files(tmp_path):
+    """``cli consume-files`` never stops its session; its process exit
+    still removes the socket directory with every socket in it."""
+    from ukis_kafka_spark import cli
+
+    from .test_cli import _write_geojson
+
+    gj, topic = tmp_path / "in.geojson", str(tmp_path / "topic")
+    _write_geojson(gj, n=5)
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0  # no JVM
+    before = _uds_leftovers()
+    proc = subprocess.run(
+        [sys.executable, "-m", "ukis_kafka_spark.cli", "consume-files", "--topic-dir", topic, "--out", str(tmp_path / "out")],
+        cwd=tmp_path,
+        env=dict(os.environ, SPARK_DRIVER_MEMORY="1g", PYTHONPATH=REPO),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "wrote 5 features" in proc.stdout
+    assert _uds_leftovers() - before == set()

@@ -145,6 +145,7 @@ def test_upsert_parquet_crash_safe_swap_leaves_no_debris(spark, tmp_path):
         path,
     )
     assert not os.path.exists(path + "._old") and not os.path.exists(path + "._new")
+    assert "_SUCCESS" not in os.listdir(path)  # the rename is the commit
     assert {(r["k"], r["v"]) for r in spark.read.parquet(path).collect()} == {(1, "A")}
 
 
@@ -993,7 +994,7 @@ def test_stream_checkpoint_writes_fork_no_readlink(spark, tmp_path):
     Through ``get_spark``'s ``FileSystemBasedCheckpointFileManager`` no
     rename forks a ``readlink`` shell. The ``FileContext``-based default
     forks 984 of them over this 11-batch stream (119 forks per batch in
-    all); only ``setPermission``'s ``chmod`` forks remain, 31 per batch.
+    all); only ``setPermission``'s ``chmod`` forks remain, 29 per batch.
     Forks are attributed to the batch whose trigger started last before
     them; the first batch also writes the query's and the state stores'
     one-time metadata, so the per-batch bound covers the others."""

@@ -112,7 +112,11 @@ def upsert_parquet(
         .observe(written, F.count(F.lit(1)).alias("n"))
     )
     tmp, old = path + "._new", path + "._old"
-    merged.write.mode("overwrite").parquet(tmp)
+    # the rename below is the commit: a ``_SUCCESS`` marker inside the
+    # swapped-in directory would tell no reader anything
+    merged.write.mode("overwrite").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(tmp)
     if os.path.exists(old):
         shutil.rmtree(old)
     if os.path.exists(path):

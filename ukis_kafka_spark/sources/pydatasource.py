@@ -204,9 +204,7 @@ def sink_py_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("append")
             .save()
         )
-        back = spark.read.schema("event_id long, event_type string, value double").json(
-            _os.path.join(out, "part-*.jsonl")
-        )
+        back = spark.read.schema("event_id long, event_type string, value double").json(out)
         return (
             back.groupBy("event_type")
             .agg(
@@ -455,9 +453,7 @@ def sink_py_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # explicit schema: inference would scan every committed file a
         # second time (guide §6); the declared types match what
         # inference produced, so the parsed values are identical
-        back = spark.read.schema("event_id long, event_type string, value double").json(
-            _os.path.join(out, "batch-*.jsonl")
-        )
+        back = spark.read.schema("event_id long, event_type string, value double").json(out)
         return (
             back.groupBy("event_type")
             .agg(
