@@ -27,7 +27,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from ukis_kafka_spark import api  # noqa: E402
 from ukis_kafka_spark.plans import get_spark  # noqa: E402
-from ukis_kafka_spark.sinks.files import upsert_base, upsert_parquet  # noqa: E402
+from ukis_kafka_spark.sinks.files import upsert_table  # noqa: E402
 from ukis_kafka_spark.sources import load_table  # noqa: E402
 
 
@@ -68,9 +68,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         kept.write.mode("overwrite").partitionBy("lang").parquet(os.path.join(out, "corpus"))
         stats_path = os.path.join(out, "doc_stats")
         stats.write.mode("overwrite").parquet(stats_path)
-        upsert_parquet(
-            spark, upsert_base(spark, stats_path, stats.schema), stats, ["doc_id"], stats_path
-        )  # idempotent re-delivery
+        upsert_table(stats, ["doc_id"], stats_path)  # idempotent re-delivery
         n_final = spark.read.parquet(stats_path).count()
         langs = len(os.listdir(os.path.join(out, "corpus"))) - 1  # minus _SUCCESS
         print(f"sinks: {n_final} stat rows upserted; corpus partitioned into ~{langs} langs")

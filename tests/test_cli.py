@@ -780,3 +780,38 @@ def test_cli_consume_upsert_recovers_table_after_crash_between_renames(spark, tm
     assert sorted(n for n in os.listdir(tmp_path) if n.startswith("table")) == ["table"]
     rows = spark.read.parquet(table).collect()
     assert sorted(int(r["fid"]) for r in rows) == list(range(15))
+
+
+@pytest.mark.parametrize(
+    "key, fids",
+    [("a.b", ["0", "1", "2"]), ("fid", ["10", "11", "12"]), ("it's", None)],
+    ids=["dotted", "plain", "quote"],
+)
+def test_cli_consume_upsert_key_names_one_property(spark, tmp_path, capsys, monkeypatch, key, fids):
+    """``--key a.b`` keys on the property ``a.b``, not on field ``b`` of
+    property ``a`` (which would fold every feature into one row). A key
+    that the JSON path cannot name, such as one with a quote, is refused
+    with exit code 2 before any Spark work."""
+    import os
+
+    from ukis_kafka_spark import plans
+
+    gj = tmp_path / "in.geojson"
+    feature = lambda i: {  # noqa: E731
+        "type": "Feature",
+        "geometry": {"type": "Point", "coordinates": [float(i), 0.0]},
+        "properties": {"a.b": i, "a": {"b": "nested"}, "fid": 10 + i, "it's": i},
+    }
+    gj.write_text(json.dumps({"type": "FeatureCollection", "features": [feature(i) for i in range(3)]}))
+    topic, table = str(tmp_path / "topic"), str(tmp_path / "table")
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", topic]) == 0
+    argv = ["consume-upsert", "--topic-dir", topic, "--table", table, "--key", key]
+    if fids is None:
+        monkeypatch.setattr(plans, "get_spark", lambda *a, **k: pytest.fail("started Spark"))
+        capsys.readouterr()
+        assert cli.main(argv) == 2
+        assert capsys.readouterr().err == f"error: --key {key!r} cannot be read as a property name\n"
+        assert not os.path.exists(table)
+        return
+    assert cli.main(argv) == 0
+    assert sorted(r["fid"] for r in spark.read.parquet(table).collect()) == fids

@@ -8,7 +8,8 @@ CPython 3.13 guard, and that the daemon starts from any working
 directory. The workers reach the JVM over Unix domain sockets in a
 private directory per process: the tests pin the socket family inside
 a worker, a deep ``java.io.tmpdir``, and that no socket file or
-directory outlives the process.
+directory outlives the process. ``get_spark`` leaves adaptive query
+execution to Spark's defaults; a test pins that they stay on.
 """
 
 from __future__ import annotations
@@ -30,6 +31,12 @@ from ukis_kafka_spark.plans import pydaemon
 from .conftest import REPO
 
 LAZY_ZIPIMPORT = hasattr(zipimport.zipimporter, "_get_files")
+
+
+def test_get_spark_relies_on_adaptive_execution_defaults(spark):
+    """AQE and its partition coalescing are on without a setting of ours."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
 
 
 def test_python_worker_skips_unchanged_archive_rereads(spark):

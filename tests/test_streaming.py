@@ -223,6 +223,21 @@ def test_decode_feature_stream_rejects_props_that_are_not_json(spark, props, say
         decode_feature_stream(raw(good, props)).collect()
 
 
+def test_decode_feature_stream_reads_absent_or_nil_srid_as_4326(spark):
+    """``read_envelope`` accepts a ``meta.srid`` that is absent or nil;
+    both decode to the producer's default, 4326. Any integer, GPKG's
+    SRS id 0 too, decodes as it is."""
+    from ukis_kafka_spark.sources.envelope import packb
+    from ukis_kafka_spark.sources.kafka import decode_feature_stream
+    from ukis_kafka_spark.spatial.wkb import encode_wkb
+
+    geom = encode_wkb(("POINT", (1.0, 2.0)))
+    metas = [{"layer": "pts"}, {"layer": "pts", "srid": None}, {"layer": "pts", "srid": 0}, {"layer": "pts", "srid": 3857}]
+    envs = [(packb({"geom": geom, "props": {"i": i}, "meta": m}), i) for i, m in enumerate(metas)]
+    got = decode_feature_stream(spark.createDataFrame(envs, "value binary, i long")).orderBy("i").collect()
+    assert [r["srid"] for r in got] == [4326, 4326, 0, 3857]
+
+
 def test_postgis_sink_sql_generation(spark):
     from pyspark.sql import types as T
 
@@ -953,19 +968,15 @@ def _write_feature_topic(topic: str, first: int, last: int, per_file: int = 50) 
 def _feature_upsert_stream(spark, topic: str, table: str, ckpt: str):
     """The stream consumer's pipeline (``perfbench/stream_consume.py``):
     envelope file stream, one file per trigger → decode → watermark on
-    due time → ``dropDuplicates`` → ``foreachBatch(upsert_parquet)``,
-    started with ``availableNow`` on an empty table if none exists."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ukis_kafka_spark.sinks.files import upsert_parquet
+    due time → ``dropDuplicates`` → ``foreachBatch(upsert_table)``,
+    started with ``availableNow``. It differs from the benchmark's
+    callback only in the base read: that one passes
+    ``spark.read.parquet(table)`` (a schema-inference job per batch, no
+    recovery of a crashed swap, and the table must exist), while
+    ``upsert_table`` starts, recovers and reads the table itself."""
+    from ukis_kafka_spark.sinks.files import upsert_table
     from ukis_kafka_spark.sources.kafka import decode_feature_stream, envelope_raw_stream
 
-    if not os.path.exists(table):
-        os.makedirs(table)
-        cols = {"layer": pa.string(), "srid": pa.int32(), "geom_type": pa.string(), "wkb": pa.binary()}
-        cols |= {"props_json": pa.string(), "fid": pa.string()}
-        pq.write_table(pa.table({c: pa.array([], t) for c, t in cols.items()}), os.path.join(table, "part-0.parquet"))
     events = (
         decode_feature_stream(envelope_raw_stream(spark, wire_dir=topic, max_files_per_trigger=1))
         .withColumn("fid", F.get_json_object("props_json", "$.fid"))
@@ -977,9 +988,21 @@ def _feature_upsert_stream(spark, topic: str, table: str, ckpt: str):
     )
 
     def sink(batch, batch_id):
-        upsert_parquet(spark, spark.read.parquet(table), batch, ["fid"], table, seq_col="seq")
+        upsert_table(batch, ["fid"], table, seq_col="seq")
 
     return events.writeStream.foreachBatch(sink).option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+
+
+def _latest_props(sent: list[dict]) -> dict[str, str]:
+    """The props of the highest-``seq`` event per fid, as the table stores them."""
+    latest = {}
+    for e in sorted(sent, key=lambda e: e["seq"]):
+        latest[str(e["fid"])] = json.dumps({k: e[k] for k in ("due_ms", "fid", "seq")}, sort_keys=True)
+    return latest
+
+
+def _table_props(spark, table: str) -> dict[str, str]:
+    return {r["fid"]: r["props_json"] for r in spark.read.parquet(table).collect()}
 
 
 def _dedup_dropped(q) -> int:
@@ -1091,8 +1114,47 @@ def test_stateful_upsert_stream_restarts_on_its_checkpoint(spark, tmp_path):
     assert _dedup_dropped(first) == sum(e["file"] < 5 for e in resent) == 21
     assert _dedup_dropped(second) == sum(e["file"] >= 5 for e in resent) == 30
     assert min(p.batchId for p in second.recentProgress) > max(p.batchId for p in first.recentProgress)
-    latest = {}
-    for e in sorted(sent, key=lambda e: e["seq"]):
-        latest[str(e["fid"])] = json.dumps({k: e[k] for k in ("due_ms", "fid", "seq")}, sort_keys=True)
-    got = {r["fid"]: r["props_json"] for r in spark.read.parquet(table).collect()}
-    assert got == latest
+    assert _table_props(spark, table) == _latest_props(sent)
+
+
+def test_upsert_stream_replays_a_batch_that_crashed_inside_its_swap(spark, tmp_path, monkeypatch):
+    """Crash the last data batch's commit between the swap's two
+    renames: the query fails with the table at ``._old`` and the merged
+    version at ``._new``. Restarted on the same checkpoint, the query
+    replays that batch, ``upsert_table`` recovers the swap before it
+    reads, and the table ends as the latest row per fid with no swap
+    debris. The batch carries 50 of the 80 fids and no later batch
+    re-sends the others, so a replay into a new table instead of the
+    recovered one loses 30 fids. The dedup state drops each re-send once
+    across both runs."""
+    from pyspark.errors import StreamingQueryException
+
+    from ukis_kafka_spark.sinks import files
+
+    topic, table, ckpt = (str(tmp_path / n) for n in ("topic", "table", "ckpt"))
+    sent = _write_feature_topic(topic, 0, 5)
+    rename, swaps = os.rename, []
+
+    def rename_crashing_fourth_swap(src, dst):
+        if src == table + "._new" and os.path.exists(table + "._old"):
+            swaps.append(src)
+            if len(swaps) == 4:  # batch 0 starts the table; batch 4 reads file 4
+                raise OSError("crash between the renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(files.os, "rename", rename_crashing_fourth_swap)
+    first = _feature_upsert_stream(spark, topic, table, ckpt)
+    with pytest.raises(StreamingQueryException, match="crash between the renames"):
+        first.awaitTermination()
+    monkeypatch.setattr(files.os, "rename", rename)
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "table._new", "table._old", "topic"]
+    crashed = max(p.batchId for p in first.recentProgress) + 1
+    assert crashed == 4
+
+    second = _feature_upsert_stream(spark, topic, table, ckpt)
+    second.awaitTermination()
+    assert min(p.batchId for p in second.recentProgress) == crashed
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "table", "topic"]
+    resent = [e for e in sent if e["seq"] // 50 != e["file"]]
+    assert _dedup_dropped(first) + _dedup_dropped(second) == len(resent) == 21
+    assert _table_props(spark, table) == _latest_props(sent)

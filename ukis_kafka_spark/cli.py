@@ -19,7 +19,7 @@ a position that is not two numbers (e.g. a GeoJSON altitude) raises
 ``ValueError``. Producers parse and encode with the cyclic GC paused
 and start no JVM. Consumers read the topic with
 ``sources.kafka.read_topic`` and run the R7/R8 sinks.
-``consume-upsert`` takes the table through ``sinks.files.upsert_base``.
+``consume-upsert`` commits into its table with ``sinks.files.upsert_table``.
 """
 
 from __future__ import annotations
@@ -184,26 +184,29 @@ def cmd_consume_upsert(args: argparse.Namespace) -> int:
     """R7+R9: topic → keyed upsert (idempotent re-delivery). One decode
     pass: the keyless count is an Observation on the plan the merge runs,
     and the row count is what the merge wrote."""
+    # bracket notation reads ``a.b`` as that key, but reads these keys as NULL
+    if not args.key or args.key == "*" or "'" in args.key or args.key[0] in " \t\n\v\f\r":
+        print(f"error: --key {args.key!r} cannot be read as a property name", file=sys.stderr)
+        return 2
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .plans import get_spark
-    from .sinks.files import upsert_base, upsert_parquet
+    from .sinks.files import upsert_table
 
     spark = get_spark("cli-consume-upsert")
     keyless = Observation()
     feats = (
         _decoded_features(spark, args.topic_dir)
-        .withColumn("fid", F.get_json_object("props_json", f"$.{args.key}"))
+        .withColumn("fid", F.get_json_object("props_json", f"$['{args.key}']"))
         .observe(keyless, F.count_if(F.col("fid").isNull()).alias("n"))
     )
     # keyless features cannot be upserted idempotently; dropping them is
     # explicit (a NULL key would otherwise collapse them into one row)
     updates = feats.where(F.col("fid").isNotNull())
-    base = upsert_base(spark, args.table, feats.drop("offset").schema)
     # offset-order last-write-wins: re-delivered same-key messages in
     # one batch resolve to the latest produce, like the reference consumer
-    n_rows = upsert_parquet(spark, base, updates, ["fid"], args.table, seq_col="offset")
+    n_rows = upsert_table(updates, ["fid"], args.table, seq_col="offset")
     n_keyless = keyless.get["n"]
     if n_keyless:
         print(f"warning: dropping {n_keyless} features without a '{args.key}' property")

@@ -3,8 +3,8 @@
 The driver supplies its own session to ``__spark_entry__``; this
 builder exists for local pytest / bench use and encodes the local-mode
 tuning from SURVEY.md §4: shuffle partitions ≈ cores (the default 200
-would dominate sub-second queries), AQE on, UTC timezone (hash-parity
-with the DuckDB oracle), Arrow for pandas interchange.
+would dominate sub-second queries), AQE on (Spark's default), UTC
+timezone (hash-parity with the DuckDB oracle), Arrow for pandas.
 
 At cluster scale the same code works unchanged: shuffle partitions and
 memory are deploy-time settings, and every operator here builds a
@@ -109,8 +109,6 @@ def get_spark(app_name: str = "ukis-kafka-spark", cpus: int | None = None) -> Sp
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

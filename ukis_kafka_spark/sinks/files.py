@@ -2,12 +2,12 @@
 reference parity R7/R8: PostGIS upsert sink + partitioned filesystem
 sink).
 
-``upsert_parquet`` is the offline stand-in for MERGE INTO (Delta/JDBC
-in production): last-writer-wins by key, crash-safe directory swap;
-``upsert_base`` is its table's one reader. The queries run the real
-sinks against repo-local scratch space and oracle-check what a reader
-sees afterwards — sink correctness is judged by read-back, not by
-write success.
+``upsert_table`` is the offline stand-in for MERGE INTO (Delta/JDBC in
+production) and every caller's one commit: ``upsert_base`` reads the
+table, ``upsert_parquet`` merges (last-writer-wins by key, crash-safe
+directory swap). The queries run the real sinks against repo-local
+scratch space and oracle-check what a reader sees afterwards — sink
+correctness is judged by read-back, not by write success.
 """
 
 from __future__ import annotations
@@ -92,8 +92,8 @@ def upsert_parquet(
     loses data, and the target is absent only for the duration of one
     directory rename (never a recursive delete). A crash between the
     two renames is undone by :func:`recover_swap`, which runs first
-    here; a caller that reads ``base`` from ``path`` calls
-    :func:`upsert_base`, which recovers before it reads."""
+    here; program callers use :func:`upsert_table`, which recovers
+    before it reads ``base``."""
     recover_swap(path)
     order, helper_cols = [F.col("_prio").asc()], ["_prio", "_rn"]
     if seq_col is not None:
@@ -124,6 +124,16 @@ def upsert_parquet(
     os.rename(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
     return written.get["n"]
+
+
+def upsert_table(updates: DataFrame, keys: list[str], path: str, seq_col: str | None = None) -> int:
+    """Commit ``updates`` into the keyed table at ``path`` and return the
+    rows written: :func:`upsert_base` (a new table takes the updates'
+    schema less ``seq_col``), then :func:`upsert_parquet`, both in the
+    program's session (a stateful stream's ``foreachBatch`` clone has AQE off)."""
+    spark = SparkSession.active()
+    base = upsert_base(spark, path, StructType([f for f in updates.schema if f.name != seq_col]))
+    return upsert_parquet(spark, base, updates, keys, path, seq_col=seq_col)
 
 
 @query(
@@ -196,13 +206,7 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("NEW").alias("c_mktsegment"),
         )
         c.write.mode("overwrite").parquet(target)
-        upsert_parquet(
-            spark,
-            upsert_base(spark, target, c.schema),
-            updates_existing.unionByName(updates_new),
-            ["c_custkey"],
-            target,
-        )
+        upsert_table(updates_existing.unionByName(updates_new), ["c_custkey"], target)
         return spark.read.parquet(target).localCheckpoint()
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -187,7 +187,8 @@ def decode_feature_stream(raw: DataFrame) -> DataFrame:
                 except (TypeError, ValueError) as exc:
                     raise ValueError(f"envelope props are not JSON: {exc}") from None
                 out["layer"].append(env["meta"]["layer"])
-                out["srid"].append(env["meta"].get("srid", 4326))
+                srid = env["meta"].get("srid")  # absent or nil: the producer's default
+                out["srid"].append(4326 if srid is None else srid)
                 out["geom_type"].append(gtype)
                 out["wkb"].append(env["geom"])
                 out["props_json"].append(props_json)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..sinks.files import upsert_table
 from ..sources import load_table
 
 _EVENT_SCHEMA = (
@@ -564,16 +565,6 @@ def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _with_scratch(go)
 
 
-def _upsert_latest_event(spark: SparkSession, updates: DataFrame, target: str) -> None:
-    """Merge into ``target``, the highest ``last_event_id`` per user
-    winning (on a copy: the sink drops its ``seq_col``)."""
-    from ..sinks.files import upsert_base, upsert_parquet
-
-    base = upsert_base(spark, target, updates.schema)
-    seq = updates.withColumn("_seq", F.col("last_event_id"))
-    upsert_parquet(spark, base, seq, ["user_id"], target, seq_col="_seq")
-
-
 @query(
     "s_foreach_upsert",
     oracle="""
@@ -602,10 +593,11 @@ def s_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("last_event_id"),
             F.col("event_type").alias("last_type"),
             F.col("value").alias("last_value"),
+            F.col("event_id").alias("_seq"),  # the sink's seq_col, dropped on merge
         )
 
         q = (
-            sel.writeStream.foreachBatch(lambda batch, _: _upsert_latest_event(spark, batch, target))
+            sel.writeStream.foreachBatch(lambda batch, _: upsert_table(batch, ["user_id"], target, "_seq"))
             .option("checkpointLocation", os.path.join(work, "ckpt_upsert"))
             .trigger(availableNow=True)
             .start()
@@ -1743,10 +1735,12 @@ def s_warm_start_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same table — the migration pattern every batch-to-streaming
     cutover runs, where the bug class is the seam (records at the
     boundary applied twice, or the stream clobbering newer history
-    with older events).  Last-write-wins keyed on the ts-monotone
-    event_id makes the seam idempotent, and the oracle is simply the
-    per-user latest over ALL events — if the handoff double-applied or
-    dropped the boundary, the hash breaks.  Scale: the backfill is one
+    with older events).  The anti-join on the history's event ids keeps
+    the seam safe: the sink ranks by event_id only within a batch, and a
+    later batch wins, so a history event applied again could clobber a
+    newer row.  The oracle is the per-user latest over ALL events — if
+    the handoff double-applied or dropped the boundary, the hash breaks.
+    Scale: the backfill is one
     batch job; the streaming continuation is s_foreach_upsert's merge
     loop unchanged — the handoff costs nothing but the split
     bookkeeping."""
@@ -1766,9 +1760,10 @@ def s_warm_start_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("last_event_id"),
             F.col("event_type").alias("last_type"),
             F.floor(F.col("value") * 100).cast("long").alias("last_value_centi"),
+            F.col("event_id").alias("_seq"),
         ]
         hist = e.join(F.broadcast(hist_ids), "event_id").select(*sel_cols)
-        _upsert_latest_event(spark, hist, target)
+        upsert_table(hist, ["user_id"], target, "_seq")
 
         stream = replay_events_as_stream(spark, sf_dir, work, n_chunks=4)
         live = stream.join(
@@ -1776,7 +1771,7 @@ def s_warm_start_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(*sel_cols)
 
         q = (
-            live.writeStream.foreachBatch(lambda batch, _: _upsert_latest_event(spark, batch, target))
+            live.writeStream.foreachBatch(lambda batch, _: upsert_table(batch, ["user_id"], target, "_seq"))
             .option("checkpointLocation", os.path.join(work, "ckpt_warm"))
             .trigger(availableNow=True)
             .start()
