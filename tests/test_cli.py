@@ -414,6 +414,30 @@ def test_cli_concurrent_producers_get_disjoint_offsets(spark, tmp_path):
     assert sorted(bytes(r["value"]) for r in rows) == sorted(want)
 
 
+def test_cli_produce_removes_its_temp_file_when_a_rename_fails(tmp_path, monkeypatch):
+    """A produce whose 3rd slice fails to rename in raises, and leaves
+    no hidden ``.part-….parquet.tmp`` file in the topic dir."""
+    import os
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")  # four slices
+    gj = tmp_path / "in.geojson"
+    _write_geojson(gj, n=100)
+    topic = tmp_path / "topic"
+    rename, renamed = os.rename, []
+
+    def rename_failing_third(src, dst):
+        renamed.append(src)
+        if len(renamed) == 3:
+            raise OSError("rename failed")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename_failing_third)
+    with pytest.raises(OSError, match="rename failed"):
+        cli.main(["produce", "--geojson", str(gj), "--topic-dir", str(topic)])
+    assert len(renamed) == 3
+    assert [n for n in os.listdir(topic) if n.endswith(".tmp")] == []
+
+
 def test_cli_producers_import_no_pyspark(tmp_path):
     """Two ``produce`` calls into one topic, in a fresh process, import
     no ``pyspark`` module (``sources.kafka`` keeps its Spark imports
@@ -747,19 +771,56 @@ def test_fixed_width_layout_parses_back_exactly(spark):
         assert r.price_micro_sum == int(micros.sum())
 
 
-def test_cli_consume_upsert_recovers_table_after_crash_between_renames(spark, tmp_path, monkeypatch):
-    """Upsert fids 0-9, then crash an upsert of fids 5-14 after the old
-    table moved to ``<table>._old`` and before the new one moved in. The
-    re-run finds no table; it must move ``._old`` back and merge into it,
-    not start a new table (which loses fids 0-4)."""
+def _export_rows(spark, consumer: str, out: str) -> list:
+    """What a reader sees in a consumer's output directory, sorted."""
+    if consumer == "consume-geojson":
+        return sorted(r["value"] for r in spark.read.text(out).collect())
+    return sorted((r["offset"], r["props_json"]) for r in spark.read.parquet(out).collect())
+
+
+@pytest.mark.parametrize("consumer", ["consume-files", "consume-geojson"])
+def test_cli_export_keeps_previous_output_when_it_fails(spark, tmp_path, consumer):
+    """Export a clean topic, append an envelope that does not decode, and
+    export again. The second run raises; ``--out`` still reads back the
+    first export, and no ``._new`` directory is left beside it."""
     import os
 
-    table = str(tmp_path / "table")
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import PythonException
+
+    gj, topic, out = tmp_path / "in.geojson", tmp_path / "topic", str(tmp_path / "out")
+    _write_geojson(gj, n=20)
+    assert cli.main(["produce", "--geojson", str(gj), "--topic-dir", str(topic)]) == 0
+    argv = [consumer, "--topic-dir", str(topic), "--out", out]
+    assert cli.main(argv) == 0
+    before = _export_rows(spark, consumer, out)
+    assert len(before) == 20
+
+    garbage = pa.table({"value": pa.array([b"not an envelope"], pa.binary()), "offset": pa.array([20], pa.int64())})
+    pq.write_table(garbage, topic / f"part-{20:020d}.parquet")
+    with pytest.raises(PythonException, match="ValueError"):
+        cli.main(argv)
+    assert sorted(n for n in os.listdir(tmp_path) if n.startswith("out")) == ["out"]
+    assert _export_rows(spark, consumer, out) == before
+
+
+@pytest.mark.parametrize("consumer", ["consume-upsert", "consume-files"])
+def test_cli_consume_upsert_recovers_table_after_crash_between_renames(spark, tmp_path, monkeypatch, consumer):
+    """Consume fids 0-9, then crash a consume of fids 5-14 after the old
+    output moved to ``<out>._old`` and before the new one moved in. The
+    re-run finds no output; it must move ``._old`` back first, not start
+    from nothing. The table then merges into it (not a new table, which
+    loses fids 0-4); the export is replaced by exactly fids 5-14."""
+    import os
+
+    out = str(tmp_path / "out")
+    flag = "--table" if consumer == "consume-upsert" else "--out"
     for name, start in (("first", 0), ("second", 5)):
         _write_geojson(tmp_path / f"{name}.geojson", n=10, start=start)
         topic = str(tmp_path / name)
         assert cli.main(["produce", "--geojson", str(tmp_path / f"{name}.geojson"), "--topic-dir", topic]) == 0
-    assert cli.main(["consume-upsert", "--topic-dir", str(tmp_path / "first"), "--table", table]) == 0
+    assert cli.main([consumer, "--topic-dir", str(tmp_path / "first"), flag, out]) == 0
 
     rename, renamed = os.rename, []
 
@@ -769,17 +830,20 @@ def test_cli_consume_upsert_recovers_table_after_crash_between_renames(spark, tm
             raise OSError("crash between the renames")
         rename(src, dst)
 
-    second = ["consume-upsert", "--topic-dir", str(tmp_path / "second"), "--table", table]
+    second = [consumer, "--topic-dir", str(tmp_path / "second"), flag, out]
     monkeypatch.setattr(os, "rename", rename_failing_second)
     with pytest.raises(OSError, match="crash between"):
         cli.main(second)
     monkeypatch.setattr(os, "rename", rename)
-    assert not os.path.exists(table) and os.path.exists(table + "._old")
+    assert not os.path.exists(out) and os.path.exists(out + "._old")
 
     assert cli.main(second) == 0
-    assert sorted(n for n in os.listdir(tmp_path) if n.startswith("table")) == ["table"]
-    rows = spark.read.parquet(table).collect()
-    assert sorted(int(r["fid"]) for r in rows) == list(range(15))
+    assert sorted(n for n in os.listdir(tmp_path) if n.startswith("out")) == ["out"]
+    rows = spark.read.parquet(out).collect()
+    if consumer == "consume-upsert":
+        assert sorted(int(r["fid"]) for r in rows) == list(range(15))
+    else:
+        assert sorted(json.loads(r["props_json"])["fid"] for r in rows) == list(range(5, 15))
 
 
 @pytest.mark.parametrize(

@@ -7,8 +7,9 @@ a real worker, the correctness of the skip on a zip that changes, the
 CPython 3.13 guard, and that the daemon starts from any working
 directory. The workers reach the JVM over Unix domain sockets in a
 private directory per process: the tests pin the socket family inside
-a worker, a deep ``java.io.tmpdir``, and that no socket file or
-directory outlives the process. ``get_spark`` leaves adaptive query
+a worker, a deep ``java.io.tmpdir``, that no socket file or directory
+outlives the process, and that a worker whose output is cut short
+prints no ``BrokenPipeError`` traceback. ``get_spark`` leaves adaptive query
 execution to Spark's defaults; a test pins that they stay on.
 """
 
@@ -180,14 +181,14 @@ def test_get_spark_runs_python_udf_outside_repo(tmp_path):
         sys.path.insert(0, {REPO!r})
         from ukis_kafka_spark.plans import get_spark
 
-        spark = get_spark("out-of-cwd", cpus=2)
+        spark = get_spark("out-of-cwd")
         rows = spark.range(10).repartition(2).mapInPandas(lambda it: it, "id long").collect()
         assert sorted(r.id for r in rows) == list(range(10)), rows
         spark.stop()
         """
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_DRIVER_MEMORY"] = "1g"
+    env.update(SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="2")
     deep = tmp_path / ("d" * 90)
     deep.mkdir()
     for java_options in ({}, {"JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={deep}"}):
@@ -200,6 +201,40 @@ def test_get_spark_runs_python_udf_outside_repo(tmp_path):
             timeout=300,
         )
         assert proc.returncode == 0, (java_options, proc.stderr[-4000:])
+
+
+def test_python_worker_cut_short_prints_no_broken_pipe(tmp_path):
+    """``first()`` and ``take()`` stop reading a Python task's output
+    early. Over a Unix socket the worker's last flush then fails with
+    ``BrokenPipeError``; the daemon module ends that worker without
+    printing the traceback, and the rows stay right."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import functions as F
+        from ukis_kafka_spark.plans import get_spark
+
+        spark = get_spark("broken-pipe")
+        for i in range(4):
+            df = spark.createDataFrame([(i, '{{"a": %d}}' % i)], "id long, j string")
+            assert df.select(F.get_json_object("j", "$.a").alias("a")).first().a == str(i)
+            rows = spark.range(20).repartition(4).mapInPandas(lambda it: it, "id long")
+            first, two = rows.first(), rows.take(2)
+            assert 0 <= first.id < 20 and len(two) == 2 and len({{r.id for r in two}}) == 2, (first, two)
+        spark.stop()
+        """
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=dict(os.environ, SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="2"),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "Broken pipe" not in proc.stderr, proc.stderr[-4000:]
 
 
 def _marked_pids(marker: str) -> set[int]:
@@ -239,14 +274,14 @@ def test_no_process_outlives_a_stopped_session(tmp_path):
                 pass
             yield pd.DataFrame({{"m": [os.environ.get("UKIS_TEST_MARKER", "")]}})
 
-        spark = get_spark("leak-check", cpus=2)
+        spark = get_spark("leak-check")
         print(spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir"))
         rows = spark.range(10).repartition(2).mapInPandas(marker, "m string").collect()
         assert [r.m for r in rows] == [{marker!r}] * 2, rows
         stop_spark(spark)
         """
     )
-    env = dict(os.environ, UKIS_TEST_MARKER=marker, SPARK_DRIVER_MEMORY="1g")
+    env = dict(os.environ, UKIS_TEST_MARKER=marker, SPARK_DRIVER_MEMORY="1g", SPARK_GRAFT_CPUS="2")
     proc = subprocess.run(
         [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
     )

@@ -19,7 +19,9 @@ a position that is not two numbers (e.g. a GeoJSON altitude) raises
 ``ValueError``. Producers parse and encode with the cyclic GC paused
 and start no JVM. Consumers read the topic with
 ``sources.kafka.read_topic`` and run the R7/R8 sinks.
-``consume-upsert`` commits into its table with ``sinks.files.upsert_table``.
+``consume-upsert`` commits into its table with ``sinks.files.upsert_table``,
+the exports with ``sinks.files.replace_dir``: a failed run leaves the
+previous output in place.
 """
 
 from __future__ import annotations
@@ -162,12 +164,14 @@ def cmd_produce_gpkg(args: argparse.Namespace) -> int:
 
 
 def cmd_consume_files(args: argparse.Namespace) -> int:
-    """R8: topic → partitioned filesystem sink, counted by an
-    Observation on the write (re-reading the output costs a scan)."""
+    """R8: topic → partitioned filesystem sink, committed with
+    ``replace_dir`` and counted by an Observation on the write
+    (re-reading the output costs a scan)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from .plans import get_spark
+    from .sinks.files import replace_dir
 
     spark = get_spark("cli-consume-files")
     obs = Observation()
@@ -175,7 +179,7 @@ def cmd_consume_files(args: argparse.Namespace) -> int:
     writer = feats.write.mode("overwrite")
     if args.partition_by:
         writer = writer.partitionBy(*args.partition_by.split(","))
-    writer.parquet(args.out)
+    replace_dir(args.out, writer.parquet)
     print(f"wrote {obs.get['n']} features to {args.out}")
     return 0
 
@@ -237,14 +241,15 @@ def _wkb_to_geojson_geom(buf: bytes) -> dict:
 def cmd_consume_geojson(args: argparse.Namespace) -> int:
     """R8 export leg: topic → GeoJSON. Default output is RFC 8142
     GeoJSON Text Sequences (one Feature per line) written DISTRIBUTED
-    via the text sink — the shape that survives a 100 TB topic.
-    ``--collection`` assembles a single FeatureCollection file on the
-    driver instead (offset-ordered, deterministic) — only for exports
-    small enough to want one file."""
+    via the text sink and committed with ``replace_dir`` — the shape
+    that survives a 100 TB topic. ``--collection`` assembles a single
+    FeatureCollection file on the driver instead (offset-ordered,
+    deterministic) — only for exports small enough to want one file."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     from .plans import get_spark
+    from .sinks.files import replace_dir
 
     spark = get_spark("cli-consume-geojson")
     feats = _decoded_features(spark, args.topic_dir)
@@ -278,9 +283,8 @@ def cmd_consume_geojson(args: argparse.Namespace) -> int:
         from pyspark.sql import Observation
 
         obs = Observation()
-        fdf.observe(obs, F.count(F.lit(1)).alias("n")).select("feature").write.mode(
-            "overwrite"
-        ).text(args.out)
+        writer = fdf.observe(obs, F.count(F.lit(1)).alias("n")).select("feature").write.mode("overwrite")
+        replace_dir(args.out, writer.text)
         n = obs.get["n"]
     print(f"exported {n} features to {args.out}")
     return 0

@@ -17,6 +17,8 @@ st_size)`` differs from the last read, the same kind of stamp that
 ``importlib``'s ``FileFinder`` keeps for a directory. CPython 3.13
 made the call lazy (the class grew ``_get_files``); there ``install``
 changes nothing.
+
+The script also wraps ``pyspark.daemon.worker`` (see ``worker`` below).
 """
 
 from __future__ import annotations
@@ -68,7 +70,20 @@ if __name__ == "__main__":
     import importlib
 
     install()
-    from pyspark.daemon import manager
+    from pyspark import daemon
 
+    _worker = daemon.worker
+
+    def worker(sock, authenticated) -> int:
+        """``pyspark.daemon.worker``, but a JVM that closed the socket
+        before the last flush (``first()``/``take()`` stop reading early;
+        over a Unix socket that write fails at once) ends the worker with
+        code 1, so it is not reused, and prints no traceback."""
+        try:
+            return _worker(sock, authenticated)
+        except BrokenPipeError:
+            return 1
+
+    daemon.worker = worker
     importlib.invalidate_caches()  # one read per archive; forked workers inherit it
-    manager()
+    daemon.manager()

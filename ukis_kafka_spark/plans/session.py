@@ -99,11 +99,10 @@ def _python_socket_dir() -> str:
     return _socket_dirs[pid]
 
 
-def get_spark(app_name: str = "ukis-kafka-spark", cpus: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "ukis-kafka-spark") -> SparkSession:
     from pyspark.sql import SparkSession
 
-    if cpus is None:
-        cpus = local_cpus()
+    cpus = local_cpus()
     package_parent = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     return (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -4,8 +4,9 @@ sink).
 
 ``upsert_table`` is the offline stand-in for MERGE INTO (Delta/JDBC in
 production) and every caller's one commit: ``upsert_base`` reads the
-table, ``upsert_parquet`` merges (last-writer-wins by key, crash-safe
-directory swap). The queries run the real sinks against repo-local
+table, ``upsert_parquet`` merges (last-writer-wins by key).
+``replace_dir`` swaps in every consumer's output directory, the table
+included. The queries run the real sinks against repo-local
 scratch space and oracle-check what a reader sees afterwards — sink
 correctness is judged by read-back, not by write success.
 """
@@ -15,6 +16,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,16 +33,38 @@ def _scratch_dir() -> str:
 
 
 def recover_swap(path: str) -> None:
-    """Undo an :func:`upsert_parquet` swap that crashed between its two
-    renames: ``path`` is missing and the previous table sits at
+    """Undo a :func:`replace_dir` swap that crashed between its two
+    renames: ``path`` is missing and the previous output sits at
     ``path + '._old'``. Moves it back and drops the new version at
     ``path + '._new'``, so a re-run (or a stream replay of the batch)
-    re-applies the updates to the previous table instead of treating
-    the target as new. Any other state is left as it is."""
+    starts from the previous output instead of treating the target as
+    new. Any other state is left as it is."""
     old = path + "._old"
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
         shutil.rmtree(path + "._new", ignore_errors=True)
+
+
+def replace_dir(path: str, write: Callable[[str], None]) -> None:
+    """Replace the directory ``path`` with what ``write(path + '._new')``
+    writes, after :func:`recover_swap` (an ``overwrite`` writer clears a
+    ``._new`` that a killed run left). If ``write`` raises, ``._new`` is
+    removed and ``path`` stays as it was. Else two renames swap it in:
+    the previous output waits at ``path + '._old'`` until the new one
+    is in place, so no crash point loses both."""
+    recover_swap(path)
+    new, old = path + "._new", path + "._old"
+    try:
+        write(new)
+    except BaseException:
+        shutil.rmtree(new, ignore_errors=True)
+        raise
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(new, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def upsert_base(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -83,18 +107,13 @@ def upsert_parquet(
 
     Implementation: tag priority (updates 0, base 1) → union → rank
     each key once by (priority asc, ``seq_col`` desc) → keep rank 1 →
-    write to a fresh directory → two-rename swap. One window, so one
-    shuffle: ``base`` gets a NULL ``seq_col`` of the updates' type, so
-    the union stays strict by name, and NULL sequences sort last. The
-    swap is not atomic for concurrent readers (that needs a metastore /
-    Delta log); it is crash-safe: the previous table survives at
-    ``path + '._old'`` until the new one is in place, so no crash point
-    loses data, and the target is absent only for the duration of one
-    directory rename (never a recursive delete). A crash between the
-    two renames is undone by :func:`recover_swap`, which runs first
-    here; program callers use :func:`upsert_table`, which recovers
+    commit with :func:`replace_dir`. One window, so one shuffle:
+    ``base`` gets a NULL ``seq_col`` of the updates' type, so the union
+    stays strict by name, and NULL sequences sort last. The swap is not
+    atomic for concurrent readers (that needs a metastore / Delta log);
+    it is crash-safe, and a failed merge leaves the table as it was.
+    Program callers use :func:`upsert_table`, which recovers the table
     before it reads ``base``."""
-    recover_swap(path)
     order, helper_cols = [F.col("_prio").asc()], ["_prio", "_rn"]
     if seq_col is not None:
         base = base.withColumn(seq_col, F.lit(None).cast(updates.schema[seq_col].dataType))
@@ -111,18 +130,10 @@ def upsert_parquet(
         .drop(*helper_cols)
         .observe(written, F.count(F.lit(1)).alias("n"))
     )
-    tmp, old = path + "._new", path + "._old"
-    # the rename below is the commit: a ``_SUCCESS`` marker inside the
+    # the swap is the commit: a ``_SUCCESS`` marker inside the
     # swapped-in directory would tell no reader anything
-    merged.write.mode("overwrite").option(
-        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
-    ).parquet(tmp)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    writer = merged.write.mode("overwrite").option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    replace_dir(path, writer.parquet)
     return written.get["n"]
 
 

@@ -55,7 +55,8 @@ def publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
     :func:`data_files`, so concurrent producers get disjoint, gap-free
     offsets. The envelopes land in contiguous slices, one per local core
     (the read parallelism of a consumer), each named by its first offset
-    and renamed in from a hidden temp name, which no reader sees."""
+    and renamed in from a hidden temp name, which no reader sees; a
+    failed write or rename removes its temp file."""
     import fcntl
 
     import pyarrow as pa
@@ -76,8 +77,13 @@ def publish_envelopes(envelopes: list[bytes], topic_dir: str) -> None:
                 }
             )
             tmp = os.path.join(topic_dir, f".{name}.tmp")
-            pq.write_table(table, tmp)
-            os.rename(tmp, os.path.join(topic_dir, name))
+            try:
+                pq.write_table(table, tmp)
+                os.rename(tmp, os.path.join(topic_dir, name))
+            except BaseException:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+                raise
 
         n, k = len(envelopes), local_cpus()
         cuts = sorted({i * n // k for i in range(k + 1)})
